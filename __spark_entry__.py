@@ -71,10 +71,11 @@ _GAP_30M_MS, _WIN_6H_MS = 1_800_000, 21_600_000
 # (the noop sink forces the full compute), and spark.catalog.clearCache()
 # between bench runs is unaffected because nothing here is persisted.
 # Keyed by the session OBJECT so a new session never sees a dead handle.
-# Shape: {session: {(sf_dir, table_key): DataFrame}} — on lookup, entries
-# of OTHER sessions are dropped (ADVICE r16 low: a long-lived multi-session
-# process, e.g. pytest, would otherwise accumulate dead py4j-backed handles
-# forever; the driver's one-session runs see exactly the old behavior).
+# Shape: {session: {(sf_dir, table_key): DataFrame}} — a lookup from a
+# session not seen before drops the entries of STOPPED sessions only (a
+# long-lived multi-session process, e.g. pytest, would otherwise
+# accumulate dead py4j-backed handles forever), so live sessions that
+# alternate lookups each keep their own memo.
 _TABLE_CACHE: dict = {}
 
 #: sentinel key for the shimmed events handle — a non-string object so no
@@ -82,10 +83,16 @@ _TABLE_CACHE: dict = {}
 _EVENTS_KEY = object()
 
 
+def _is_stopped(spark) -> bool:
+    """A stopped session's SparkContext has dropped its JVM handle."""
+    return getattr(getattr(spark, "_sc", None), "_jsc", None) is None
+
+
 def _session_cache(spark: SparkSession) -> dict:
     cache = _TABLE_CACHE.get(spark)
     if cache is None:
-        _TABLE_CACHE.clear()  # previous sessions' handles are dead weight
+        for dead in [s for s in _TABLE_CACHE if _is_stopped(s)]:
+            del _TABLE_CACHE[dead]  # stopped sessions' handles are dead weight
         cache = _TABLE_CACHE[spark] = {}
     return cache
 

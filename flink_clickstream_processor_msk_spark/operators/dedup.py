@@ -453,12 +453,6 @@ def _banded_frame(
     )
 
 
-#: legacy (pre-r16) state-root dirs superseded by the generation layout —
-#: removed after an install upgrades an old state (dead by then: every
-#: resolver prefers the generation placement)
-_LEGACY_ROOT_DIRS = ("banded_delta", "banded_ptmod", "deleted_ids")
-
-
 def _write_ptmod_marker(spark, gen_dir: str, n_buckets: int) -> None:
     """Persist the modulus INDEPENDENTLY of row count: an empty corpus
     writes no partition files (the ptmod column then has no row to
@@ -491,29 +485,27 @@ def _stage_banded_generation(
     )
 
 
-def state_ptmod(spark, path: str) -> int | None:
+def state_ptmod(spark, path: str) -> int:
     """The banded state's bucket modulus: the ``banded_ptmod`` marker
     written inside the generation (row-count-independent — the
-    empty-corpus bootstrap keeps its configured modulus; pre-r16 states
-    keep it at the state root, resolved by :func:`lsm.sidecar_path`),
-    falling back to the in-table constant ``ptmod`` column for states
-    written before the marker existed. ``None`` only for a legacy empty
-    state — callers then adopt the default, exactly the legacy behavior.
-    One tiny-file read; ingest sinks resolve this ONCE and thread it
-    through probe + append instead of paying two footer-read jobs per
-    micro-batch (VERDICT r8 wrong #3)."""
+    empty-corpus bootstrap keeps its configured modulus). Every state
+    starts with :func:`save_dedup_state`, which always writes it, so a
+    missing marker means a crashed or foreign layout and is refused
+    loudly. One tiny-file read; ingest sinks resolve this ONCE and
+    thread it through probe + append instead of paying two footer-read
+    jobs per micro-batch (VERDICT r8 wrong #3)."""
     from pyspark.errors import AnalysisException
 
+    p = lsm.sidecar_path(spark, path, "banded_state", "banded_ptmod")
     try:
-        row = spark.read.parquet(
-            lsm.sidecar_path(spark, path, "banded_state", "banded_ptmod")
-        ).first()
-        if row is not None:
-            return row["ptmod"]
+        row = spark.read.parquet(p).first()
     except AnalysisException:
-        pass
-    row = load_banded_state(spark, path).select("ptmod").first()
-    return None if row is None else row["ptmod"]
+        row = None
+    if row is None:
+        raise ValueError(
+            f"no banded_ptmod marker at {p}; save_dedup_state first"
+        )
+    return row["ptmod"]
 
 
 def save_dedup_state(
@@ -558,8 +550,6 @@ def save_dedup_state(
         _stage_banded_generation(state, path, n_bands, n_perms, n_buckets)
         lsm.swap_base(spark, path, "minhash_state")
         lsm.swap_base(spark, path, "banded_state")
-        for d in _LEGACY_ROOT_DIRS:
-            lsm.delete_path(spark, f"{path}/{d}")
     finally:
         state.unpersist()
 
@@ -574,14 +564,14 @@ def append_dedup_state(
     :func:`batch_dedup_state`) into the saved state, so the NEXT ingest
     batch is checked against old + new. ``n_buckets`` defaults to
     whatever the existing banded table was written with (the
-    ``banded_ptmod`` marker / ``ptmod`` column, :func:`state_ptmod`) —
+    ``banded_ptmod`` marker, :func:`state_ptmod`) —
     appending with a different modulus would corrupt partition routing
     and is refused, INCLUDING on an empty-corpus bootstrap (the marker
     survives zero rows). ``resolved_ptmod`` lets a long-running ingest
     sink thread an already-resolved modulus through, skipping the
     per-batch marker read.
 
-    The banded rows go to a FLAT ``banded_delta`` area, not into the
+    The banded rows go to the generation's FLAT ``delta``, not into the
     partitioned base: a dynamic-partition append commits one file per
     touched (band_idx, pt) directory — measured 3.6-5.7 s of committer
     overhead for a 500-doc batch (~250 directories) vs 0.2 s flat. The
@@ -607,6 +597,19 @@ def append_dedup_state(
         new_state, path, "minhash_state", "doc_id",
         "compact_dedup_state", "documents",
     )
+    recorded = (
+        resolved_ptmod if resolved_ptmod is not None else state_ptmod(spark, path)
+    )
+    if n_buckets is None:
+        n_buckets = recorded
+    elif n_buckets != recorded:
+        # a mismatched modulus would route the same band_key to a
+        # DIFFERENT partition than the existing rows — probes would then
+        # silently miss corpus members. Refuse loudly, before any write.
+        raise ValueError(
+            f"banded state at {path} was written with n_buckets="
+            f"{recorded}; cannot append with n_buckets={n_buckets}"
+        )
     # lsm.data_path self-heals any interrupted swap BEFORE the append
     # (r15 review #2, now enforced inside the lsm resolvers): a
     # mode("append") parquet write into a missing live dir CREATES it,
@@ -617,26 +620,9 @@ def append_dedup_state(
     new_state.select("doc_id", "shingles", "signature").coalesce(
         delta_files
     ).write.mode("append").parquet(lsm.data_path(spark, path, "minhash_state"))
-    recorded = (
-        resolved_ptmod
-        if resolved_ptmod is not None
-        else state_ptmod(new_state.sparkSession, path)
-    )
-    if recorded is None:  # legacy pre-marker state with zero rows
-        n_buckets = n_buckets if n_buckets is not None else NUM_STATE_BUCKETS
-    elif n_buckets is None:
-        n_buckets = recorded
-    elif n_buckets != recorded:
-        # a mismatched modulus would route the same band_key to a
-        # DIFFERENT partition than the existing rows — probes would then
-        # silently miss corpus members. Refuse loudly.
-        raise ValueError(
-            f"banded state at {path} was written with n_buckets="
-            f"{recorded}; cannot append with n_buckets={n_buckets}"
-        )
     lsm.append_delta(
         _banded_frame(new_state, n_bands, n_perms, n_buckets),
-        path, "banded_state", "banded_delta", delta_files,
+        path, "banded_state", delta_files,
     )
 
 
@@ -684,7 +670,7 @@ def load_banded_delta(spark, path: str) -> DataFrame:
     return _banded_or_empty(
         spark,
         lambda: spark.read.parquet(
-            lsm.delta_path(spark, path, "banded_state", "banded_delta")
+            lsm.delta_path(spark, path, "banded_state")
         ),
     )
 
@@ -789,8 +775,7 @@ def compact_dedup_state(
     reverting it — the orders differ because compact derives from the
     old truth while save replaces it."""
     if n_buckets is None:
-        recorded = state_ptmod(spark, path)
-        n_buckets = recorded if recorded is not None else NUM_STATE_BUCKETS
+        n_buckets = state_ptmod(spark, path)
     had_tombstones = load_deleted_ids(spark, path) is not None
     state = _materialized(load_dedup_state(spark, path))
     try:
@@ -805,9 +790,6 @@ def compact_dedup_state(
         lsm.swap_base(spark, path, "banded_state")
         if had_tombstones:
             lsm.swap_base(spark, path, "minhash_state")
-        # dead legacy dirs (pre-r16 layouts only; no-ops on v2 states)
-        for d in _LEGACY_ROOT_DIRS:
-            lsm.delete_path(spark, f"{path}/{d}")
     finally:
         state.unpersist()
 
@@ -1737,9 +1719,12 @@ def semantic_dedup(
     Scale shape: the quadratic term is per-cell (≈ (n/k)² per cell), and
     k GROWS with the corpus (SemDeDup used 50 k clusters for LAION) so
     cell populations stay bounded; at cluster scale the cell table is the
-    written IVF index partitioned by ``cell`` (save_ivf_index), making
-    the pair self-join cell-co-partitioned — no corpus-wide shuffle and
-    no all-pairs term. The k-means build reuses the ANN index machinery
+    written IVF index partitioned by ``cell`` (save_ivf_index). Candidate
+    pairs come from the :func:`_bucket_pairs` grouped expansion: a
+    groupBy ``cell`` over that cell-partitioned index, each member
+    expanded against the later members of its cell — at most one
+    exchange of the cell table, no self-join and no all-pairs term.
+    The k-means build reuses the ANN index machinery
     (:func:`~...similarity.kmeans_refine_centroids`: one distributed
     pass per iteration, only k×(dim+1) scaled-integer sums to the
     driver), so the SAME written index serves both search and dedup.
@@ -1750,7 +1735,7 @@ def semantic_dedup(
     ``sim_ann_ivf_kmeans_topk``.
 
     ``vectorized=True`` swaps the per-pair Catalyst cosine fold (and the
-    pair self-join itself) for the per-cell Arrow-batched
+    grouped pair expansion itself) for the per-cell Arrow-batched
     :func:`_semdedup_flags_kernel` (one numpy matmul per cell,
     epsilon-band sequential re-fold — decision-identical to the fold,
     see ``_COS_EPS``; each vector crosses Arrow once per cell instead of

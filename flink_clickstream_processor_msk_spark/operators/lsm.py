@@ -11,7 +11,7 @@ ids, and a periodic compaction that folds the delta back. Rounds 13/14
 showed the pattern maintained twice breeds duplicated bug crops (each
 crash-window ordering had to be found and fixed on each side
 separately), so the disk-shape primitives live here ONCE, parameterized
-by layout (subdir, partition columns, delta subdir, id column). The two
+by layout (subdir, partition columns, id column). The two
 families keep their own ORCHESTRATION — what a save writes, when
 compaction rewrites its source of truth — and delegate every shared
 disk decision to these functions.
@@ -39,14 +39,6 @@ self-heals deterministically at the next read/append/delete
 (:func:`self_heal_swap`): the staged directory is always COMPLETE
 before the live delete starts, so healing installs a consistent
 generation.
-
-LEGACY LAYOUT (pre-r16) is auto-detected per call
-(:func:`generation_layout`): table files directly under ``{sub}/``,
-delta at ``{path}/{legacy_delta_sub}``, tombstones at
-``{path}/deleted_ids``, sidecars at ``{path}/<name>``. Reads, appends
-and deletes keep working against a legacy state unchanged; the next
-generation INSTALL (a save or compaction) upgrades the state to v2 and
-removes the dead legacy directories.
 
 Measured properties inherited from both parents (full provenance in the
 callers' docstrings): dynamic-partition appends pay 3.6-5.7 s/batch of
@@ -109,61 +101,37 @@ def copy_dir(spark, src: str, dst: str) -> bool:
     return True
 
 
-# --- layout resolution --------------------------------------------------------
-
-
-def generation_layout(spark, path: str, sub: str) -> bool:
-    """Is ``{path}/{sub}`` a v2 generation directory? Self-heals an
-    interrupted swap first (so a healed state answers for its REAL
-    layout), then probes: a live dir with a ``data`` child is v2; a live
-    dir without one is a legacy base (table files sit directly in it); a
-    missing live dir is a fresh state, which always starts v2."""
-    self_heal_swap(spark, path, sub)
-    if path_exists(spark, f"{path}/{sub}"):
-        # a data child marks an installed v2 generation; a journal child
-        # marks an EMBRYONIC one (bootstrap-by-append/delete wrote the
-        # journal before any save) — legacy bases contain neither, only
-        # table files / partition dirs
-        return (
-            path_exists(spark, f"{path}/{sub}/{DATA_SUB}")
-            or path_exists(spark, f"{path}/{sub}/{DELTA_SUB}")
-            or path_exists(spark, f"{path}/{sub}/{TOMBSTONES_SUB}")
-        )
-    return True
+# --- path resolution ----------------------------------------------------------
 
 
 def data_path(spark, path: str, sub: str) -> str:
-    """The table directory under either layout."""
-    if generation_layout(spark, path, sub):
-        return f"{path}/{sub}/{DATA_SUB}"
-    return f"{path}/{sub}"
+    """The generation's table directory. Every resolver self-heals an
+    interrupted swap first (:func:`self_heal_swap`), so whatever the
+    caller reads, appends or deletes next lands in the installed
+    generation, never in a half-made live dir."""
+    self_heal_swap(spark, path, sub)
+    return f"{path}/{sub}/{DATA_SUB}"
 
 
-def delta_path(spark, path: str, sub: str, legacy_delta_sub: str) -> str:
-    """The append-journal directory under either layout."""
-    if generation_layout(spark, path, sub):
-        return f"{path}/{sub}/{DELTA_SUB}"
-    return f"{path}/{legacy_delta_sub}"
+def delta_path(spark, path: str, sub: str) -> str:
+    """The generation's append-journal directory (self-heals first)."""
+    self_heal_swap(spark, path, sub)
+    return f"{path}/{sub}/{DELTA_SUB}"
 
 
-def tombstones_path(spark, path: str, sub: str | None) -> str:
-    """The tombstone directory under either layout. ``sub`` is the
-    generation that OWNS deletes for the state (the index data table;
-    the dedup state's ``minhash_state`` source of truth) — ``None`` when
-    the state has no data table yet (a delete issued before any save),
-    which keeps the legacy state-root placement every later resolver of
-    an absent generation also reads."""
-    if sub is not None and generation_layout(spark, path, sub):
-        return f"{path}/{sub}/{TOMBSTONES_SUB}"
-    return f"{path}/deleted_ids"
+def tombstones_path(spark, path: str, sub: str) -> str:
+    """The generation's tombstone directory (self-heals first). ``sub``
+    is the generation that OWNS deletes for the state (the index data
+    table; the dedup state's ``minhash_state`` source of truth)."""
+    self_heal_swap(spark, path, sub)
+    return f"{path}/{sub}/{TOMBSTONES_SUB}"
 
 
 def sidecar_path(spark, path: str, sub: str, name: str) -> str:
-    """A sidecar's directory under either layout (v2: inside the live
-    generation; legacy: a sibling of the base at the state root)."""
-    if generation_layout(spark, path, sub):
-        return f"{path}/{sub}/{name}"
-    return f"{path}/{name}"
+    """A sidecar's directory inside the live generation (self-heals
+    first)."""
+    self_heal_swap(spark, path, sub)
+    return f"{path}/{sub}/{name}"
 
 
 def staged_dir(path: str, sub: str) -> str:
@@ -221,8 +189,7 @@ def self_heal_swap(spark, path: str, sub: str) -> None:
     (delta appends, tombstone writes — parquet ``mode("append")``
     creates missing parents) must run this first, or the staged
     generation would be orphaned behind a half-made live dir (r15
-    review #2, now enforced inside :func:`append_delta` /
-    :func:`write_tombstones`)."""
+    review #2, now enforced inside the path resolvers)."""
     fs, cur = hadoop_fs(spark, f"{path}/{sub}")
     if not fs.exists(cur):
         staged = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
@@ -238,7 +205,6 @@ def install_base(
     sub: str,
     part_cols: tuple[str, ...],
     write_sidecars=None,
-    legacy_cleanup: tuple[str, ...] = (),
 ) -> None:
     """Shared generation install for every save/compact: stage the data
     table, let the caller write sidecars INTO the staged generation
@@ -252,49 +218,35 @@ def install_base(
     and the next install clears the stale staging dir. Crash between the
     live delete and the rename: self-heals at the next access, and the
     healed generation is complete because staging finished before the
-    delete began.
-
-    ``legacy_cleanup``: pre-r16 state-root directories (the old flat
-    delta, ``deleted_ids``, old sidecar homes) deleted AFTER the swap
-    when upgrading a legacy state — dead by then (every resolver prefers
-    the generation layout), so a crash before this cleanup leaves only
-    unreferenced dirs."""
-    spark = rows.sparkSession
+    delete began."""
     write_base_staged(rows, path, sub, part_cols)
     if write_sidecars is not None:
         write_sidecars(staged_dir(path, sub))
-    swap_base(spark, path, sub)
-    for d in legacy_cleanup:
-        delete_path(spark, f"{path}/{d}")
+    swap_base(rows.sparkSession, path, sub)
 
 
 # --- journal: appends -----------------------------------------------------------
 
 
-def append_delta(
-    rows: DataFrame, path: str, sub: str, legacy_delta_sub: str, n_files: int = 1
-) -> None:
+def append_delta(rows: DataFrame, path: str, sub: str, n_files: int = 1) -> None:
     """Flat delta append, coalesced to ``n_files`` (default ONE) parquet
     files — the append half of the LSM contract (module docstring).
-    Self-heals an interrupted swap first: the append write would
-    otherwise CREATE the live dir and orphan a staged generation."""
-    spark = rows.sparkSession
-    self_heal_swap(spark, path, sub)
+    :func:`delta_path` self-heals an interrupted swap first: the append
+    write would otherwise CREATE the live dir and orphan a staged
+    generation."""
     rows.coalesce(n_files).write.mode("append").parquet(
-        delta_path(spark, path, sub, legacy_delta_sub)
+        delta_path(rows.sparkSession, path, sub)
     )
 
 
-def read_base_with_delta(
-    spark, path: str, sub: str, legacy_delta_sub: str
-) -> DataFrame:
+def read_base_with_delta(spark, path: str, sub: str) -> DataFrame:
     """The LSM read path: self-heal an interrupted swap, read the base,
     union the flat delta when one exists (delta columns cast to the
     base's types — the base read surfaces routing columns as INFERRED
     partition columns whose physical types can differ). Tombstones are
     the caller's layer (:func:`apply_tombstones`)."""
     base = spark.read.parquet(data_path(spark, path, sub))
-    dp = delta_path(spark, path, sub, legacy_delta_sub)
+    dp = delta_path(spark, path, sub)
     if path_exists(spark, dp):
         delta = spark.read.parquet(dp)
         base = base.unionByName(
@@ -316,9 +268,9 @@ def write_tombstones(spark, path: str, sub: str, ids, id_col: str) -> None:
     generation's ``deleted_ids``; every read applies them
     (:func:`apply_tombstones`), compaction drops the rows physically and
     clears them (the staged generation carries none). ``ids``: an
-    iterable or a DataFrame with an ``id_col`` column. Self-heals an
-    interrupted swap first (same orphaning hazard as
-    :func:`append_delta`)."""
+    iterable or a DataFrame with an ``id_col`` column.
+    :func:`tombstones_path` self-heals an interrupted swap first (same
+    orphaning hazard as :func:`append_delta`)."""
     tomb = (
         ids
         if isinstance(ids, DataFrame)
@@ -326,8 +278,6 @@ def write_tombstones(spark, path: str, sub: str, ids, id_col: str) -> None:
             spark, [(int(i),) for i in ids], f"{id_col} long"
         )
     )
-    if sub is not None:
-        self_heal_swap(spark, path, sub)
     tomb.select(id_col).distinct().write.mode("append").parquet(
         tombstones_path(spark, path, sub)
     )

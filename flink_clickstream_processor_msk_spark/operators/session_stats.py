@@ -69,17 +69,16 @@ def think_time_stats(clickevents: DataFrame) -> DataFrame:
     )
 
 
-def windowed_session_stats(sessions, time_col, window: str) -> DataFrame:
-    """The Q2 aggregate/projection over session rows bucketed at
-    ``time_col`` — THE one place the count/buy-count/floor-percent formula
-    lives. Shared by the built-in chain (session_stats, bucketing on
-    ``window_time(_session)``) and the custom-sessionizer cascade
-    (streaming.stateful.session_stats_from_state, bucketing on the
-    re-watermarked session-output timestamp), so the reference-parity
-    percent quirk cannot desync between the two paths."""
+def session_stats(user_sessions: DataFrame, window: str = DEFAULT_WINDOW) -> DataFrame:
+    """UserIdSessionEvent rows (with `_session` window col) → UserIdAggEvent.
+
+    Buckets each session at window_time(_session) = session end − 1 µs; this
+    is also the streaming-correct chained-stateful form (Spark ≥ 3.4).
+    """
     buy = F.col("orderCheckoutEventCount") != 0
+    bucket = F.window(F.window_time("_session"), window).alias("bucket")
     return (
-        sessions.groupBy(F.window(time_col, window).alias("bucket"))
+        user_sessions.groupBy(bucket)
         .agg(
             F.count(F.lit(1)).cast("int").alias("userSessionCount"),
             F.count(F.when(buy, F.lit(1)))
@@ -97,15 +96,4 @@ def windowed_session_stats(sessions, time_col, window: str) -> DataFrame:
             F.unix_millis(F.col("bucket.start")).alias("windowBeginTime"),
             F.unix_millis(F.col("bucket.end")).alias("windowEndTime"),
         )
-    )
-
-
-def session_stats(user_sessions: DataFrame, window: str = DEFAULT_WINDOW) -> DataFrame:
-    """UserIdSessionEvent rows (with `_session` window col) → UserIdAggEvent.
-
-    Buckets each session at window_time(_session) = session end − 1 µs; this
-    is also the streaming-correct chained-stateful form (Spark ≥ 3.4).
-    """
-    return windowed_session_stats(
-        user_sessions, F.window_time("_session"), window
     )

@@ -66,33 +66,31 @@ _INDEX_TABLES: dict[str, tuple[str, str | None]] = {
 _INDEX_SUBS = ("cells", "buckets", "codes")
 
 
-def _index_sub(spark, path: str) -> str | None:
+def _index_sub(spark, path: str) -> str:
     """Which data-table generation lives at ``path`` (an index path hosts
-    exactly one kind) — probes live + staged dirs; ``None`` for a path
-    with no index yet (tombstones then use the legacy state-root
-    placement, see :func:`lsm.tombstones_path`)."""
+    exactly one kind) — probes live + staged dirs; a path with no index
+    is refused loudly (nothing there to read a sidecar from or delete
+    out of)."""
     for sub in _INDEX_SUBS:
         if lsm.path_exists(spark, f"{path}/{sub}") or lsm.path_exists(
             spark, lsm.staged_dir(path, sub)
         ):
             return sub
-    return None
+    raise ValueError(f"no index at {path}")
 
 
 def _sidecar_path(spark, path: str, name: str) -> str:
-    """A sidecar's directory: inside the live generation for r16 layouts,
-    at the state root for pre-r16 ones (:func:`lsm.sidecar_path`)."""
-    sub = _index_sub(spark, path)
-    if sub is None:
-        return f"{path}/{name}"
-    return lsm.sidecar_path(spark, path, sub, name)
+    """A sidecar's directory inside the index's live generation
+    (:func:`lsm.sidecar_path`)."""
+    return lsm.sidecar_path(spark, path, _index_sub(spark, path), name)
 
 
 def delete_from_index(spark, path: str, vec_ids) -> None:
     """Tombstone vectors out of a written index: subsequent loads (and
     therefore every probe over them) exclude the ids; the next
     :func:`compact_index` drops their rows physically. ``vec_ids``: an
-    iterable of ids or a DataFrame with a ``vec_id`` column."""
+    iterable of ids or a DataFrame with a ``vec_id`` column. A path with
+    no index is refused (``ValueError``)."""
     lsm.write_tombstones(spark, path, _index_sub(spark, path), vec_ids, "vec_id")
 
 
@@ -125,7 +123,7 @@ def _read_index_table(spark, path: str, sub: str) -> DataFrame:
     finish a crash-interrupted swap, read the base, union the flat
     append delta — a filter on the routing column still partition-prunes
     the base branch and row-group-skips the small delta branch."""
-    return lsm.read_base_with_delta(spark, path, sub, f"{sub}_delta")
+    return lsm.read_base_with_delta(spark, path, sub)
 
 
 def _append_index_rows(rows: DataFrame, path: str, sub: str) -> None:
@@ -134,13 +132,7 @@ def _append_index_rows(rows: DataFrame, path: str, sub: str) -> None:
     banded-dedup-state delta discipline; measured provenance in the lsm
     module docstring); :func:`compact_index` folds it back into the
     partition-pruned base on the caller's cadence."""
-    lsm.append_delta(rows, path, sub, f"{sub}_delta")
-
-
-#: legacy (pre-r16) state-root dirs superseded by the generation layout —
-#: removed after an install upgrades an old state (dead by then: every
-#: resolver prefers the generation placement)
-_LEGACY_ROOT_DIRS = ("deleted_ids", "centroids", "codebooks", "ood_ref", "lsh_meta")
+    lsm.append_delta(rows, path, sub)
 
 
 def _install_index_base(
@@ -160,7 +152,6 @@ def _install_index_base(
     lsm.install_base(
         rows, path, sub, (part_col,) if part_col else (),
         write_sidecars=write_sidecars,
-        legacy_cleanup=(f"{sub}_delta", *_LEGACY_ROOT_DIRS),
     )
 
 
@@ -249,7 +240,7 @@ def compact_index(spark, path: str, kind: str) -> None:
     shares, which the monitors read post-delete by construction."""
     sub, part_col = _INDEX_TABLES[kind]
     has_delta = lsm.path_exists(
-        spark, lsm.delta_path(spark, path, sub, f"{sub}_delta")
+        spark, lsm.delta_path(spark, path, sub)
     )
     if load_index_tombstones(spark, path) is None and not has_delta:
         return
@@ -813,11 +804,13 @@ def save_lsh_index(
 
 def saved_lsh_n_planes(spark, path: str) -> int:
     """The n_planes a written LSH index was SAVED with (``lsh_meta``
-    sidecar; pre-sidecar legacy indexes resolve to the N_PLANES
-    default — exactly what their save used)."""
+    sidecar). :func:`save_lsh_index` always writes it, so a missing
+    sidecar means a crashed or foreign layout and is refused loudly (the
+    :func:`_load_centroids` contract) — assuming the default would
+    silently bucket appends into a different code space."""
     meta_p = _sidecar_path(spark, path, "lsh_meta")
     if not lsm.path_exists(spark, meta_p):
-        return N_PLANES
+        raise ValueError(f"no lsh_meta sidecar at {meta_p}")
     return int(spark.read.parquet(meta_p).first()["n_planes"])
 
 

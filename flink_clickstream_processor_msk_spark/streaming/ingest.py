@@ -111,9 +111,7 @@ class _StateHandles:
 
     def ptmod(self, spark: SparkSession) -> int:
         if self._ptmod is None:
-            # None only for a legacy pre-marker EMPTY state, where the
-            # default is exactly what the legacy append would adopt
-            self._ptmod = state_ptmod(spark, self.state_path) or NUM_STATE_BUCKETS
+            self._ptmod = state_ptmod(spark, self.state_path)
         return self._ptmod
 
     def banded(self, spark: SparkSession) -> DataFrame:
@@ -568,8 +566,8 @@ def semantic_dedup_ingest_sink(
     crosses Arrow once per cell instead of once per candidate pair, and
     the epsilon-band sequential re-fold keeps every decision
     bit-identical to the batch operator's Catalyst fold, so batch parity
-    is preserved exactly); the fold-in is a ONE-file flat append to
-    ``cells_delta`` (the LSM append path every ``append_to_*_index``
+    is preserved exactly); the fold-in is a ONE-file flat append to the
+    ``cells`` generation's ``delta`` (the LSM append path every ``append_to_*_index``
     uses — ``compact_index`` folds it back on the caller's cadence);
     per-epoch scratch unpersists in a finally. At-least-once as
     elsewhere — wrap in ``sinks.dedup_epochs`` (a replayed epoch would

@@ -12,6 +12,8 @@ cache and pays the full pipeline per run (the CACHE_DEPS contract).
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import __spark_entry__ as entry_mod
 from conftest import SF_SMOKE
 
@@ -99,19 +101,42 @@ def test_table_handles_memoized_per_session_and_plan_only(spark):
     assert (SF_SMOKE, entry_mod._EVENTS_KEY) in entry_mod._TABLE_CACHE[spark]
 
 
+class _StoppedSession:
+    """Stands in for a stopped session: its SparkContext has dropped the
+    JVM handle (what ``SparkContext.stop`` does)."""
+
+    _sc = SimpleNamespace(_jsc=None)
+
+
 def test_table_cache_evicts_dead_sessions(spark):
-    """ADVICE r16 low: handles keyed by a stopped/replaced session must
-    not accumulate — a lookup from a different session key drops the old
-    session's entries (the driver's one-session runs are unaffected)."""
+    """Handles keyed by a stopped session must not accumulate — a lookup
+    from a session not seen before drops the stopped session's entries,
+    while a live session's memo survives it."""
     t1 = entry_mod._table(spark, SF_SMOKE, "documents")
-    fake_session = object()
-    entry_mod._session_cache(fake_session)
-    assert spark not in entry_mod._TABLE_CACHE  # old session swept
-    # the real session repopulates (fresh handle) and sweeps the fake one
-    t2 = entry_mod._table(spark, SF_SMOKE, "documents")
-    assert fake_session not in entry_mod._TABLE_CACHE
-    assert t2 is entry_mod._table(spark, SF_SMOKE, "documents")
-    assert t2 is not t1 and t2.count() == t1.count()
+    dead = _StoppedSession()
+    entry_mod._session_cache(dead)[(SF_SMOKE, "documents")] = t1
+    other = spark.newSession()
+    try:
+        entry_mod._session_cache(other)
+        assert dead not in entry_mod._TABLE_CACHE  # stopped session swept
+        assert entry_mod._table(spark, SF_SMOKE, "documents") is t1
+    finally:
+        entry_mod._TABLE_CACHE.pop(other, None)
+
+
+def test_table_cache_keeps_each_live_sessions_memo(spark):
+    """Alternating lookups between two live sessions must not thrash the
+    memo: each session gets back its own memoized DataFrame object."""
+    other = spark.newSession()
+    try:
+        mine = entry_mod._table(spark, SF_SMOKE, "documents")
+        theirs = entry_mod._table(other, SF_SMOKE, "documents")
+        assert theirs is not mine
+        for _ in range(2):
+            assert entry_mod._table(spark, SF_SMOKE, "documents") is mine
+            assert entry_mod._table(other, SF_SMOKE, "documents") is theirs
+    finally:
+        entry_mod._TABLE_CACHE.pop(other, None)
 
 
 def test_checkpoint_backed_frame_not_repersisted_without_classname_probe(spark):

@@ -9,6 +9,8 @@ identically to a same-centroid full rebuild."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import DataFrame
@@ -676,6 +678,18 @@ def test_append_refuses_mismatched_bucket_modulus(spark, tmp_path):
     dedup.append_dedup_state(state, path)                 # inferred
     banded = dedup.load_banded_state(spark, path)
     assert banded.select("ptmod").distinct().collect()[0]["ptmod"] == 32
+    # no marker (never saved, or a crashed/foreign layout): refused
+    # before anything is written, never guessed
+    import os
+    import shutil
+
+    never_saved = str(tmp_path / "never_saved")
+    with pytest.raises(ValueError, match="banded_ptmod"):
+        dedup.append_dedup_state(state, never_saved)
+    assert not os.path.exists(never_saved)
+    shutil.rmtree(f"{path}/banded_state/banded_ptmod")
+    with pytest.raises(ValueError, match="banded_ptmod"):
+        dedup.state_ptmod(spark, path)
     spark.catalog.clearCache()
 
 
@@ -1359,7 +1373,7 @@ def test_recommended_compact_every_arithmetic():
 
 def test_append_delta_is_one_file(spark, tmp_path):
     """delta_files=1 (default): each append lands exactly ONE parquet
-    file in banded_delta and one in minhash_state, whatever partitioning
+    file in the banded delta and one in minhash_state, whatever partitioning
     the batch frame arrives with — the file-count term that made deep
     deltas probe at 8.7 s vs the 3.4 s floor in the uncoalesced sweep
     (~31 files/append; tools/measure_compaction_cadence.py) stays
@@ -1523,10 +1537,10 @@ def test_semantic_dedup_ingest_sink_matches_batch(spark, tmp_path):
     cents = similarity.kmeans_refine_centroids(first, seed, iterations=2)
     path = str(tmp_path / "semdedup_ivf")
     _, idx0 = similarity.build_ivf_index(first, centroids=cents)
-    idx0.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/cells")
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cidx int, cvec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    similarity._install_index_base(
+        idx0, path, "ivf",
+        lambda gen_dir: similarity._write_centroids_sidecar(spark, gen_dir, cents),
+    )
     idx0.unpersist()
 
     got: list = []
@@ -1716,8 +1730,12 @@ def test_index_delete_lifecycle(spark, tmp_path, kind):
         out = load(spark, path)
         return out if isinstance(out, DataFrame) else out[-1]
 
-    save(base, path)
     victims = [0, 7, 42]
+    # a delete against a path with no index is refused, not parked in a
+    # journal nothing reads
+    with pytest.raises(ValueError, match=re.escape(f"no index at {path}")):
+        similarity.delete_from_index(spark, path, victims)
+    save(base, path)
     similarity.delete_from_index(spark, path, victims)
 
     got_ids = {r["vec_id"] for r in loaded_table().select("vec_id").collect()}
@@ -2694,6 +2712,13 @@ def test_lsh_append_uses_saved_n_planes(spark, tmp_path):
         .collect()
     }
     assert got == want
+    # a missing sidecar (crashed or foreign layout) is refused, never
+    # silently read as the default plane count
+    import shutil
+
+    shutil.rmtree(f"{path}/buckets/lsh_meta")
+    with pytest.raises(ValueError, match="lsh_meta"):
+        similarity.saved_lsh_n_planes(spark, path)
 
 
 def test_save_index_clears_stale_tombstones(spark, tmp_path):
@@ -3105,109 +3130,65 @@ def test_banded_resave_crash_keeps_modulus_and_base_paired(spark, tmp_path):
     spark.catalog.clearCache()
 
 
-def _downgrade_to_legacy_layout(path: str, subs_and_sidecars) -> None:
-    """Rewrite a v2 generation state into the PRE-r16 on-disk layout:
-    table files directly under {sub}/, sidecars at the state root —
-    the shape every state written before the generation layout has."""
-    import os
-    import shutil
-
-    for sub, sidecars in subs_and_sidecars:
-        gen = f"{path}/{sub}"
-        for name in sidecars:
-            if os.path.isdir(f"{gen}/{name}"):
-                shutil.move(f"{gen}/{name}", f"{path}/{name}")
-        data = f"{gen}/data"
-        for entry in os.listdir(data):
-            shutil.move(f"{data}/{entry}", f"{gen}/{entry}")
-        os.rmdir(data)
-
-
-def test_legacy_dedup_layout_reads_appends_and_upgrades(spark, tmp_path):
-    """Pre-r16 states keep working unchanged: reads resolve the legacy
-    placement (base files in {sub}/, marker + delta + tombstones at the
-    state root), appends land in the legacy flat delta, deletes tombstone
-    at the root — and the first COMPACT upgrades the state to the
-    generation layout, removing the dead legacy dirs, with the corpus
-    intact."""
+def test_dedup_state_layout_is_generation_only(spark, tmp_path):
+    """The generation layout is the ONLY on-disk shape: through save →
+    append → delete → compact, the dedup state root holds nothing but
+    its two generation dirs — the journal (delta, tombstones) and the
+    banded_ptmod marker live inside their generations."""
     import os
 
     corpus, new = _corpus_and_batch(spark)
-    path = str(tmp_path / "legacy_dedup")
+    path = str(tmp_path / "dedup_layout")
+
+    def root():
+        return set(os.listdir(path))
+
     dedup.save_dedup_state(corpus, path)
-    _downgrade_to_legacy_layout(
-        path,
-        [("banded_state", ("banded_ptmod",)), ("minhash_state", ())],
-    )
-    assert not os.path.exists(f"{path}/banded_state/data")
-    assert os.path.isdir(f"{path}/banded_ptmod")
-
-    # reads resolve the legacy placement
-    assert dedup.state_ptmod(spark, path) == dedup.NUM_STATE_BUCKETS
-    assert (
-        dedup.load_banded_state(spark, path).select("doc_id").distinct().count()
-        == corpus.count()
-    )
-    # appends: legacy flat delta + in-place minhash files
-    dedup.append_dedup_state(dedup.batch_dedup_state(new), path)
-    assert os.path.isdir(f"{path}/banded_delta")
-    # deletes: legacy root tombstones, applied at read
+    assert root() == {"minhash_state", "banded_state"}
+    assert os.path.isdir(f"{path}/banded_state/banded_ptmod")
+    state = dedup.batch_dedup_state(new)
+    try:
+        dedup.append_dedup_state(state, path)
+    finally:
+        state.unpersist()
+    assert os.path.isdir(f"{path}/banded_state/delta")
     dedup.delete_from_dedup_state(spark, path, [1])
-    assert os.path.isdir(f"{path}/deleted_ids")
-    assert (
-        dedup.load_dedup_state(spark, path).filter(F.col("doc_id") == 1).count()
-        == 0
-    )
+    assert os.path.isdir(f"{path}/minhash_state/deleted_ids")
+    assert root() == {"minhash_state", "banded_state"}
 
-    dedup.compact_dedup_state(spark, path)  # upgrades to v2
-    assert os.path.isdir(f"{path}/banded_state/data")
-    assert os.path.isdir(f"{path}/minhash_state/data")
-    for legacy in ("banded_delta", "banded_ptmod", "deleted_ids"):
-        assert not os.path.exists(f"{path}/{legacy}"), legacy
-    ids = {
-        r["doc_id"]
-        for r in dedup.load_dedup_state(spark, path)
-        .select("doc_id").distinct().collect()
-    }
-    assert 1 not in ids  # the tombstone became physical in the upgrade
-    assert ids == ({r["doc_id"] for r in corpus.select("doc_id").collect()}
-                   | {r["doc_id"] for r in new.select("doc_id").collect()}) - {1}
+    dedup.compact_dedup_state(spark, path)
+    assert root() == {"minhash_state", "banded_state"}
+    assert set(os.listdir(f"{path}/banded_state")) >= {"data", "banded_ptmod"}
+    assert not os.path.exists(f"{path}/banded_state/delta")
+    assert not os.path.exists(f"{path}/minhash_state/deleted_ids")
+    assert dedup.state_ptmod(spark, path) == dedup.NUM_STATE_BUCKETS
     spark.catalog.clearCache()
 
 
-def test_legacy_index_layout_reads_appends_and_upgrades(spark, tmp_path):
-    """The index-side legacy-compat twin: a pre-r16 IVF index (cells
-    files in cells/, centroids at the root) probes identically, takes
-    appends into the legacy flat delta, and upgrades to the generation
-    layout at its first compact — sidecars carried inside the new
-    generation, dead root dirs removed."""
+def test_index_layout_is_generation_only(spark, tmp_path):
+    """The index twin: through save → append → delete → compact, an IVF
+    index root holds only its ``cells`` generation, with the centroids
+    sidecar and the journal inside it."""
     import os
 
     base, drifted = _base_and_drifted(spark)
-    path = str(tmp_path / "legacy_ivf")
+    path = str(tmp_path / "ivf_layout")
     similarity.save_ivf_index(base, path)
-    want_cents = similarity._load_centroids(spark, path)
-    _downgrade_to_legacy_layout(path, [("cells", ("centroids",))])
-    assert os.path.isdir(f"{path}/centroids")
-    assert not os.path.exists(f"{path}/cells/data")
-
-    assert similarity._load_centroids(spark, path) == want_cents
-    assert similarity.load_ivf_index(spark, path)[1].count() == base.count()
-    similarity.append_to_ivf_index(drifted, path)
-    assert os.path.isdir(f"{path}/cells_delta")  # legacy delta placement
-    assert (
-        similarity.load_ivf_index(spark, path)[1].count()
-        == base.count() + drifted.count()
-    )
-
-    similarity.compact_index(spark, path, "ivf")  # upgrades to v2
-    assert os.path.isdir(f"{path}/cells/data")
+    assert set(os.listdir(path)) == {"cells"}
     assert os.path.isdir(f"{path}/cells/centroids")
-    for legacy in ("cells_delta", "centroids"):
-        assert not os.path.exists(f"{path}/{legacy}"), legacy
-    assert similarity._load_centroids(spark, path) == want_cents
+    similarity.append_to_ivf_index(drifted, path)
+    assert os.path.isdir(f"{path}/cells/delta")
+    similarity.delete_from_index(spark, path, [0])
+    assert os.path.isdir(f"{path}/cells/deleted_ids")
+    assert set(os.listdir(path)) == {"cells"}
+
+    similarity.compact_index(spark, path, "ivf")
+    assert set(os.listdir(path)) == {"cells"}
+    assert set(os.listdir(f"{path}/cells")) >= {"data", "centroids"}
+    assert not os.path.exists(f"{path}/cells/delta")
+    assert not os.path.exists(f"{path}/cells/deleted_ids")
     assert (
         similarity.load_ivf_index(spark, path)[1].count()
-        == base.count() + drifted.count()
+        == base.count() + drifted.count() - 1
     )
     spark.catalog.clearCache()

@@ -442,6 +442,32 @@ def test_late_event_dropped_at_zero_watermark(spark, tmp_path_factory):
     assert {r["userId"] for r in rows} >= {1, 2}
 
 
+def test_session_emitted_when_watermark_stops_exactly_at_session_end(
+    spark, tmp_path_factory
+):
+    """The stream's final watermark lands exactly on user 1's session end
+    (another user's event at T+gap): the session must still be emitted —
+    the built-in session window finalizes at end <= watermark."""
+    src = str(tmp_path_factory.mktemp("boundary-src"))
+    cols = [f.name for f in CLICK_EVENT.fields]
+    events = [
+        {"ts": BASE_TS, "seq": 1, "userid": 1, "event_type": "view", "product_type": "books"},
+        {"ts": BASE_TS + 1_000, "seq": 2, "userid": 2, "event_type": "view", "product_type": "toys"},
+    ]
+    make_clickevents(spark, events).select(*cols).write.mode("overwrite").parquet(src)
+    stream = stream_clickevents(spark, src, watermark="0 seconds")
+    q = memory_sink(build_streams(stream).user_sessions, "boundary_sessions")
+    q.processAllAvailable()
+    q.stop()
+
+    got = [
+        (r["userId"], r["windowBeginTime"], r["windowEndTime"],
+         r["eventCount"], list(r["deptList"]))
+        for r in spark.sql("SELECT * FROM boundary_sessions").collect()
+    ]
+    assert (1, BASE_TS, BASE_TS + 1_000, 1, ["books"]) in got
+
+
 def test_stream_dedup_drops_replayed_events(spark, tmp_path_factory):
     """At-least-once replay: the second file re-delivers (userid, seq)
     pairs from the first within the watermark delay — the dedup operator

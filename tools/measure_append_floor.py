@@ -115,7 +115,7 @@ def main() -> None:
         t_encode = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        lsm.append_delta(enc, path, sub, f"{sub}_delta")
+        lsm.append_delta(enc, path, sub)
         t_write = time.perf_counter() - t0
         enc.unpersist()
 

@@ -63,7 +63,7 @@ def main() -> None:
     base_n = min(1000, n // 2)
     path = tempfile.mkdtemp(prefix="measure-idx-compact-")
     similarity.save_ivf_index(emb.filter(F.col("vec_id") < base_n), path)
-    cents = spark.read.parquet(f"{path}/centroids").count()
+    cents = len(similarity._load_centroids(spark, path))
     probes = list(range(min(4, cents)))
 
     per = 100
