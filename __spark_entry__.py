@@ -32,14 +32,14 @@ from flink_clickstream_processor_msk_spark.operators import (
     departments as departments_mod,
 )
 from flink_clickstream_processor_msk_spark.operators.departments import (
-    department_counts,
+    department_counts_plan,
 )
 from flink_clickstream_processor_msk_spark.operators.session_stats import (
-    session_stats,
+    session_stats_plan,
     think_time_stats,
 )
 from flink_clickstream_processor_msk_spark.operators.sessionize import (
-    buy_sessions,
+    buy_sessions_plan,
     driver_output,
     drop_internal,
     sessionize,
@@ -145,21 +145,21 @@ def _q1_two_phase(gap: str):
 
 def _q1_buy(gap: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return driver_output(buy_sessions(sessionize(_clickevents(spark, sf_dir), gap=gap)))
+        return driver_output(buy_sessions_plan()(sessionize(_clickevents(spark, sf_dir), gap=gap)))
 
     return run
 
 
 def _q2(gap: str, window: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return session_stats(sessionize(_clickevents(spark, sf_dir), gap=gap), window=window)
+        return session_stats_plan(window)(sessionize(_clickevents(spark, sf_dir), gap=gap))
 
     return run
 
 
 def _q3(gap: str, window: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return department_counts(sessionize(_clickevents(spark, sf_dir), gap=gap), window=window)
+        return department_counts_plan(window)(sessionize(_clickevents(spark, sf_dir), gap=gap))
 
     return run
 
@@ -216,8 +216,8 @@ def _range_session_attribution(gap: str):
 
 def _k1(gap: str, window: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        counts = department_counts(
-            sessionize(_clickevents(spark, sf_dir), gap=gap), window=window
+        counts = department_counts_plan(window)(
+            sessionize(_clickevents(spark, sf_dir), gap=gap)
         )
         return kafka_records(counts, key_cols=["departmentName"])
 
@@ -226,8 +226,8 @@ def _k1(gap: str, window: str):
 
 def _k2(gap: str, window: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        stats = session_stats(
-            sessionize(_clickevents(spark, sf_dir), gap=gap), window=window
+        stats = session_stats_plan(window)(
+            sessionize(_clickevents(spark, sf_dir), gap=gap)
         )
         return kafka_records(stats)
 
@@ -236,8 +236,8 @@ def _k2(gap: str, window: str):
 
 def _k3(gap: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        sessions = drop_internal(
-            buy_sessions(sessionize(_clickevents(spark, sf_dir), gap=gap))
+        sessions = buy_sessions_plan()(
+            sessionize(_clickevents(spark, sf_dir), gap=gap)
         )
         return kafka_records(sessions)
 
@@ -246,8 +246,8 @@ def _k3(gap: str):
 
 def _e1(gap: str, window: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        counts = department_counts(
-            sessionize(_clickevents(spark, sf_dir), gap=gap), window=window
+        counts = department_counts_plan(window)(
+            sessionize(_clickevents(spark, sf_dir), gap=gap)
         )
         return es_bulk_records(
             counts, "departments_count",
@@ -259,8 +259,8 @@ def _e1(gap: str, window: str):
 
 def _e2(gap: str, window: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        stats = session_stats(
-            sessionize(_clickevents(spark, sf_dir), gap=gap), window=window
+        stats = session_stats_plan(window)(
+            sessionize(_clickevents(spark, sf_dir), gap=gap)
         )
         return es_bulk_records(stats, "user_session_counts")
 
@@ -269,8 +269,8 @@ def _e2(gap: str, window: str):
 
 def _e3(gap: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        sessions = drop_internal(
-            buy_sessions(sessionize(_clickevents(spark, sf_dir), gap=gap))
+        sessions = buy_sessions_plan()(
+            sessionize(_clickevents(spark, sf_dir), gap=gap)
         )
         return es_bulk_records(
             sessions, "user_session_details",

@@ -15,7 +15,7 @@ Reference parity map (file:line cites into /root/reference):
 
 - Q1 per-user session windows  -> operators.sessionize
   (ClickstreamProcessor.java:127-130)
-- F1 buy-session filter        -> operators.sessionize.buy_sessions
+- F1 buy-session filter        -> operators.sessionize.buy_sessions_plan
   (ClickstreamProcessor.java:133-134)
 - Q2 global 10s tumbling stats -> operators.session_stats
   (ClickstreamProcessor.java:141-144)

@@ -8,14 +8,19 @@ multimodal.
 """
 
 from flink_clickstream_processor_msk_spark.operators.sessionize import (
-    buy_sessions,
+    buy_sessions_plan,
     sessionize,
 )
 from flink_clickstream_processor_msk_spark.operators.session_stats import (
-    session_stats,
+    session_stats_plan,
 )
 from flink_clickstream_processor_msk_spark.operators.departments import (
-    department_counts,
+    department_counts_plan,
 )
 
-__all__ = ["sessionize", "buy_sessions", "session_stats", "department_counts"]
+__all__ = [
+    "sessionize",
+    "buy_sessions_plan",
+    "session_stats_plan",
+    "department_counts_plan",
+]

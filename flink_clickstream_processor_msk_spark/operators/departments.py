@@ -18,6 +18,8 @@ so the hot reducer receives pre-aggregated counts, not raw sessions.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,26 +31,35 @@ from flink_clickstream_processor_msk_spark.operators.session_stats import (
 )
 
 
-def department_counts(
-    user_sessions: DataFrame, window: str = DEFAULT_WINDOW
-) -> DataFrame:
-    """UserIdSessionEvent rows (with `_session` col) → DepartmentsAggEvent."""
-    return (
-        user_sessions.select(
-            F.explode(F.col("deptList")).alias("departmentName"),
-            F.window_time("_session").alias("_wt"),
-        )
-        .groupBy(
-            "departmentName", F.window(F.col("_wt"), window).alias("bucket")
-        )
-        .agg(F.count(F.lit(1)).cast("int").alias("departmentCount"))
-        .select(
-            "departmentName",
-            "departmentCount",
-            F.unix_millis(F.col("bucket.start")).alias("windowBeginTime"),
-            F.unix_millis(F.col("bucket.end")).alias("windowEndTime"),
-        )
+def department_counts_plan(
+    window: str = DEFAULT_WINDOW,
+) -> Callable[[DataFrame], DataFrame]:
+    """Q3 as a once-built plan: UserIdSessionEvent rows (with the
+    ``_session`` col) → DepartmentsAggEvent rows. Like
+    session_stats.session_stats_plan, every expression is built here and
+    the returned plan only chains DataFrame calls."""
+    exploded = (
+        F.explode(F.col("deptList")).alias("departmentName"),
+        F.window_time("_session").alias("_wt"),
     )
+    keys = (F.col("departmentName"), F.window(F.col("_wt"), window).alias("bucket"))
+    count = F.count(F.lit(1)).cast("int").alias("departmentCount")
+    output = (
+        F.col("departmentName"),
+        F.col("departmentCount"),
+        F.unix_millis(F.col("bucket.start")).alias("windowBeginTime"),
+        F.unix_millis(F.col("bucket.end")).alias("windowEndTime"),
+    )
+
+    def plan(user_sessions: DataFrame) -> DataFrame:
+        return (
+            user_sessions.select(*exploded)
+            .groupBy(*keys)
+            .agg(count)
+            .select(*output)
+        )
+
+    return plan
 
 
 def sliding_department_activity(

@@ -29,6 +29,8 @@ variant.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -42,6 +44,18 @@ from flink_clickstream_processor_msk_spark.functions.predicates import (
 )
 
 DEFAULT_GAP = "1 second"
+
+#: the UserIdSessionEvent columns (pkg/UserIdSessionEvent.java:5-12), in
+#: emit order: the Q1 aggregates, then the session bounds
+USER_SESSION_COLUMNS = (
+    "userId",
+    "eventCount",
+    "orderCheckoutEventCount",
+    "deptList",
+    "eventKey",
+    "windowBeginTime",
+    "windowEndTime",
+)
 
 
 def session_aggregates() -> list[Column]:
@@ -74,6 +88,10 @@ def sessionize(clickevents: DataFrame, gap: str = DEFAULT_GAP) -> DataFrame:
     emitted as epoch millis (windowEndTime = last event + gap, matching
     Flink's session maxTimestamp + 1ms boundary convention).
     """
+    bounds = {
+        "windowBeginTime": F.unix_millis(F.col("session.start")),
+        "windowEndTime": F.unix_millis(F.col("session.end")),
+    }
     return (
         clickevents.groupBy(
             F.col("userid").alias("userId"),
@@ -81,13 +99,7 @@ def sessionize(clickevents: DataFrame, gap: str = DEFAULT_GAP) -> DataFrame:
         )
         .agg(*session_aggregates())
         .select(
-            "userId",
-            "eventCount",
-            "orderCheckoutEventCount",
-            "deptList",
-            "eventKey",
-            F.unix_millis(F.col("session.start")).alias("windowBeginTime"),
-            F.unix_millis(F.col("session.end")).alias("windowEndTime"),
+            *(bounds[c].alias(c) if c in bounds else c for c in USER_SESSION_COLUMNS),
             # kept for chained event-time windows (Q2/Q3); drop via
             # drop_internal() before emitting UserIdSessionEvent rows
             F.col("session").alias("_session"),
@@ -116,9 +128,19 @@ def driver_output(df: DataFrame) -> DataFrame:
     return out
 
 
-def buy_sessions(user_sessions: DataFrame) -> DataFrame:
-    """F1 — sessions containing a checkout (ClickstreamProcessor.java:133-134)."""
-    return user_sessions.filter(F.col("orderCheckoutEventCount") != 0)
+def buy_sessions_plan() -> Callable[[DataFrame], DataFrame]:
+    """F1 as a once-built plan: the sessions containing a checkout
+    (ClickstreamProcessor.java:133-134), projected to the explicit
+    UserIdSessionEvent columns. The expressions are built here, once, and
+    the fixed column tuple replaces a per-call schema fetch
+    (:func:`drop_internal`), so a per-micro-batch caller pays neither."""
+    has_checkout = F.col("orderCheckoutEventCount") != 0
+    columns = tuple(F.col(c) for c in USER_SESSION_COLUMNS)
+
+    def plan(user_sessions: DataFrame) -> DataFrame:
+        return user_sessions.filter(has_checkout).select(*columns)
+
+    return plan
 
 
 #: two-phase chunk width (micros): 1 hour. Any value > 0 is CORRECT (the

@@ -1412,7 +1412,14 @@ def _checkpointed_counts(df: DataFrame, scratch: list | None) -> DataFrame:
     ``DataFrame.unpersist()`` is a NO-OP on a checkpoint-backed frame
     (its blocks live outside the CacheManager) — without the handle the
     scratch contract's release path would silently become
-    "wait for GC", which tests/test_beyond.py pins against."""
+    "wait for GC", which tests/test_beyond.py pins against.
+
+    Failure domain: ``localCheckpoint`` blocks live only in the executors'
+    block managers, with no replicated copy and no lineage left to
+    recompute them. They die with their executor, so on a cluster a lost
+    executor fails the query that reads the table (a reliable
+    ``checkpoint()`` to a configured checkpoint dir would survive it, at
+    the cost of a write)."""
     if scratch is None:
         return df
     df = df.localCheckpoint(eager=True)

@@ -147,6 +147,14 @@ def run_single_pass(spark: SparkSession, config: AppConfig) -> StreamingQuery:
     scale, since that form pays the source read and session-window state
     three times while its per-batch fixed costs amortize away).
 
+    Per micro-batch (streaming.pipeline.session_fanout): the finalized
+    sessions are materialized once, then the three Kafka writes run
+    concurrently, in the query's job group. A failing write does not stop
+    the other two; the query fails once all three have returned, and a
+    restart replays the batch whole, so every topic stays at-least-once
+    (consumers dedupe on key + window bounds, README "Delivery
+    semantics").
+
     Trade (documented in streaming.pipeline.session_fanout): buy-session
     records are exact; Q2/Q3 records are per-batch partial window counts
     whose downstream consumer must merge additively (upsert-with-add keyed

@@ -21,20 +21,22 @@ windows are finalized exactly once.
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from flink_clickstream_processor_msk_spark.operators.departments import (
-    department_counts,
+    department_counts_plan,
 )
 from flink_clickstream_processor_msk_spark.operators.session_stats import (
     percent_sessions_with_buy,
-    session_stats,
+    session_stats_plan,
 )
 from flink_clickstream_processor_msk_spark.operators.sessionize import (
-    buy_sessions,
+    buy_sessions_plan,
     drop_internal,
     sessionize,
 )
@@ -64,9 +66,9 @@ def build_streams(
     sessions = sessionize(clickevents, gap=gap)
     return ClickstreamStreams(
         user_sessions=drop_internal(sessions),
-        buy_sessions=drop_internal(buy_sessions(sessions)),
-        session_stats=session_stats(sessions, window=window),
-        department_counts=department_counts(sessions, window=window),
+        buy_sessions=buy_sessions_plan()(sessions),
+        session_stats=session_stats_plan(window)(sessions),
+        department_counts=department_counts_plan(window)(sessions),
     )
 
 
@@ -78,8 +80,27 @@ def build_streams(
 # The single-pass form runs ONE streaming query — sessionize once — and
 # fans out inside foreachBatch: each micro-batch of FINALIZED sessions
 # (append mode emits a session exactly once, when the watermark passes) is
-# filtered/aggregated with the same batch operators and handed to three
-# writer callables.
+# filtered/aggregated with the same batch operator plans and handed to
+# three writer callables.
+#
+# Per micro-batch: the batch is persisted and materialized by ONE action,
+# the only run of the session-window stage (and of its state-store
+# commit); the three writers then run CONCURRENTLY on a process-wide pool
+# of three threads, each reading the cached batch, each job still in the
+# streaming query's job group (so query.stop() cancels them). At this
+# batch size the per-trigger coordination sets the throughput, not the
+# data (Drizzle, PAPERS.md): the two small Q2/Q3 shuffle jobs overlap
+# instead of queueing, and the derivations' Catalyst expressions are built
+# once per session_fanout() call, not once per batch. The cache is dropped
+# only after every writer has returned — a writer reading an unpersisted
+# batch would silently re-run the stateful stage.
+#
+# Failure semantics: each writer stays at-least-once, as with sequential
+# writers (a failed batch fails the query, and a restart replays it whole
+# under the same epoch id, so writers that succeeded see it again —
+# sinks.dedup_epochs is the guard). A failing writer does not stop the
+# other two; the first error, in writer order (buy, Q2, Q3), is raised
+# once all three have returned.
 #
 # Semantics trade, stated precisely: buy-sessions are exact (a stateless
 # filter over finalized sessions). Q2/Q3 rows become PER-BATCH PARTIAL
@@ -94,6 +115,15 @@ def build_streams(
 
 BatchWriter = Callable[[DataFrame, int], None]
 
+#: name prefix of the fan-out writer threads
+FANOUT_THREAD_PREFIX = "session-fanout"
+
+#: one pool for every fan-out in the process, one thread per writer;
+#: threads start on first use
+_WRITER_POOL = ThreadPoolExecutor(
+    max_workers=3, thread_name_prefix=FANOUT_THREAD_PREFIX
+)
+
 
 def session_fanout(
     write_buy: BatchWriter,
@@ -104,23 +134,46 @@ def session_fanout(
     """foreachBatch callable for the single-pass fan-out over a sessionized
     stream (``sessionize(clickevents)`` in append mode).
 
-    The batch of finalized sessions is persisted once and consumed by all
-    three derivations — the whole point of the single pass is not paying
-    the sessionization three times, so the derivations must not re-trigger
-    the (already tiny, per-batch) plan either."""
+    The three derivations (buy projection, Q2, Q3) are built here, once.
+    Per micro-batch the batch of finalized sessions is persisted and
+    materialized by one ``count()`` — the single run of the session-window
+    stage — and the three writers then run concurrently on the process-wide
+    writer pool, each on its derivation of the cached batch. Each writer
+    task inherits the calling thread's Spark local properties, so its jobs
+    stay in the streaming query's job group and ``query.stop()`` cancels
+    them. The batch is unpersisted only after all three writers return.
+
+    On failure each writer stays at-least-once, as before: a failing
+    writer does not stop the others, and once all three have returned the
+    first error in writer order (buy, Q2, Q3) is raised. That fails the
+    query; a restart from its checkpoint replays the batch whole, under
+    the same epoch id."""
+    writers = (
+        (write_buy, buy_sessions_plan()),
+        (write_session_stats, session_stats_plan(window)),
+        (write_department_counts, department_counts_plan(window)),
+    )
 
     def fan_out(sessions_batch: DataFrame, epoch_id: int) -> None:
+        def write_derived(write: BatchWriter, plan) -> None:
+            write(plan(sessions_batch), epoch_id)
+
         sessions_batch.persist()
         try:
-            write_buy(drop_internal(buy_sessions(sessions_batch)), epoch_id)
-            write_session_stats(
-                session_stats(sessions_batch, window=window), epoch_id
-            )
-            write_department_counts(
-                department_counts(sessions_batch, window=window), epoch_id
-            )
+            sessions_batch.count()
+            session = sessions_batch.sparkSession
+            futures = [
+                _WRITER_POOL.submit(
+                    inheritable_thread_target(session)(write_derived), write, plan
+                )
+                for write, plan in writers
+            ]
+            wait(futures)
         finally:
             sessions_batch.unpersist()
+        errors = [e for f in futures if (e := f.exception()) is not None]
+        if errors:
+            raise errors[0]
 
     return fan_out
 

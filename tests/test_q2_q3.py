@@ -3,10 +3,10 @@
 from __future__ import annotations
 
 from flink_clickstream_processor_msk_spark.operators.departments import (
-    department_counts,
+    department_counts_plan,
 )
 from flink_clickstream_processor_msk_spark.operators.session_stats import (
-    session_stats,
+    session_stats_plan,
 )
 from flink_clickstream_processor_msk_spark.operators.sessionize import sessionize
 from helpers import make_clickevents
@@ -27,7 +27,7 @@ def test_q2_counts_and_truncated_percent(spark):
         {"ts": T0 + 2000, "seq": 3, "userid": 2, "event_type": "view", "product_type": "a"},
         {"ts": T0 + 4000, "seq": 4, "userid": 3, "event_type": "view", "product_type": "b"},
     ]
-    rows = session_stats(_sessions(spark, events)).collect()
+    rows = session_stats_plan()(_sessions(spark, events)).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["userSessionCount"] == 3
@@ -44,7 +44,7 @@ def test_q2_buckets_on_session_end(spark):
     events = [
         {"ts": T0 + 9_000, "seq": 1, "userid": 1, "event_type": "view", "product_type": "a"},
     ]
-    rows = session_stats(_sessions(spark, events)).collect()
+    rows = session_stats_plan()(_sessions(spark, events)).collect()
     assert len(rows) == 1
     assert rows[0]["windowBeginTime"] == T0
     assert rows[0]["windowEndTime"] == T0 + 10_000
@@ -57,7 +57,7 @@ def test_q3_department_counts(spark):
         {"ts": T0 + 100, "seq": 2, "userid": 1, "event_type": "view", "product_type": "b"},
         {"ts": T0 + 3000, "seq": 3, "userid": 2, "event_type": "view", "product_type": "a"},
     ]
-    rows = department_counts(_sessions(spark, events)).collect()
+    rows = department_counts_plan()(_sessions(spark, events)).collect()
     got = {(r["departmentName"], r["windowBeginTime"]): r["departmentCount"] for r in rows}
     assert got == {("a", T0): 2, ("b", T0): 1}
 

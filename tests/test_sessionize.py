@@ -3,7 +3,8 @@
 from __future__ import annotations
 
 from flink_clickstream_processor_msk_spark.operators.sessionize import (
-    buy_sessions,
+    USER_SESSION_COLUMNS,
+    buy_sessions_plan,
     drop_internal,
     sessionize,
 )
@@ -74,5 +75,7 @@ def test_buy_sessions_filter(spark):
         # user 3: no checkout
         {"ts": BASE_TS, "seq": 4, "userid": 3, "event_type": "view", "product_type": "c"},
     ]
-    out = drop_internal(buy_sessions(sessionize(make_clickevents(spark, events)))).collect()
+    buys = buy_sessions_plan()(sessionize(make_clickevents(spark, events)))
+    assert tuple(buys.columns) == USER_SESSION_COLUMNS
+    out = buys.collect()
     assert [r["userId"] for r in out] == [1]

@@ -72,10 +72,16 @@ def _rows(spark, table_or_df, drop_sentinel_key):
         if isinstance(table_or_df, str)
         else table_or_df
     )
-    rows = [r.asDict() for r in df.collect()]
-    rows = [r for r in rows if not drop_sentinel_key(r)]
+    return _sorted_records((r.asDict() for r in df.collect()), drop_sentinel_key)
+
+
+def _sorted_records(records, drop_sentinel_key):
     return sorted(
-        [tuple(sorted(r.items(), key=lambda kv: kv[0])) for r in rows],
+        [
+            tuple(sorted(r.items(), key=lambda kv: kv[0]))
+            for r in records
+            if not drop_sentinel_key(r)
+        ],
         key=lambda t: tuple(str(x) for x in t),
     )
 
@@ -222,24 +228,7 @@ def test_single_pass_fanout_matches_batch(spark, tmp_path_factory):
     assert _canon(_rows(spark, merged_q3, not_sentinel_q3)) == _canon(
         _rows(spark, batch.department_counts, not_sentinel_q3)
     )
-    got_buy = _canon(
-        sorted(
-            [
-                tuple(
-                    sorted(
-                        (
-                            (k, tuple(v) if isinstance(v, list) else v)
-                            for k, v in r.items()
-                        ),
-                        key=lambda kv: kv[0],
-                    )
-                )
-                for r in collected["buy"]
-                if not not_sentinel_buy(r)
-            ],
-            key=lambda t: tuple(str(x) for x in t),
-        )
-    )
+    got_buy = _canon(_sorted_records(collected["buy"], not_sentinel_buy))
     want_buy = _canon(_rows(spark, batch.buy_sessions, not_sentinel_buy))
     assert got_buy == want_buy
     assert len(got_buy) > 0
@@ -997,3 +986,324 @@ def test_streaming_matches_batch_on_rocksdb_state_store(
         got = _canon(_rows(spark, table, is_sentinel))
         want = _canon(_rows(spark, getattr(batch, attr), is_sentinel))
         assert got == want and len(got) > 0, table
+
+
+# --- single-pass fan-out: concurrent writers, plans built once, late drops --
+
+
+def _append_files(spark, src, chunks):
+    """One parquet file per chunk, in order (one file per trigger below)."""
+    cols = [f.name for f in CLICK_EVENT.fields]
+    for chunk in chunks:
+        make_clickevents(spark, chunk).select(*cols).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+
+def _fanout_writer(spark, src, fan_out, ckpt):
+    """The production single-pass topology over a file stream, not started:
+    sessionize, then ``fan_out`` inside foreachBatch, one file per trigger."""
+    from flink_clickstream_processor_msk_spark.operators.sessionize import (
+        sessionize,
+    )
+
+    stream = stream_clickevents(
+        spark, src, watermark="0 seconds", max_files_per_trigger=1
+    )
+    return (
+        sessionize(stream)
+        .writeStream.foreachBatch(fan_out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+    )
+
+
+def _drain(query):
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+
+
+@pytest.fixture(scope="module")
+def concurrent_fanout_runs(spark, tmp_path_factory):
+    """Two single-pass queries over one 5-file stream whose three writers
+    each wait on one shared 3-party barrier (so a batch completes only if
+    all three writers are in flight together) and record, per call, the
+    writer, the epoch, the job group their thread sees and the row count."""
+    import threading
+
+    from flink_clickstream_processor_msk_spark.streaming.pipeline import (
+        session_fanout,
+    )
+
+    src = str(tmp_path_factory.mktemp("concurrent-src"))
+    chunks = [
+        [
+            # a buy session per file, plus a browsing session 500 ms later
+            {"ts": BASE_TS + k * 3_000, "seq": 3 * k + 1, "userid": k + 1,
+             "event_type": "view", "product_type": "books"},
+            {"ts": BASE_TS + k * 3_000 + 200, "seq": 3 * k + 2, "userid": k + 1,
+             "event_type": "order_checkout", "product_type": "N/A"},
+            {"ts": BASE_TS + k * 3_000 + 500, "seq": 3 * k + 3, "userid": 100 + k,
+             "event_type": "view", "product_type": "garden"},
+        ]
+        for k in range(4)
+    ]
+    _append_files(spark, src, chunks + [[SENTINEL]])
+
+    barrier = threading.Barrier(3, timeout=30)
+    runs = []
+    for i in range(2):
+        records: list[dict] = []
+
+        def recorder(key, records=records):
+            def write(df, epoch_id):
+                barrier.wait()
+                records.append({
+                    "writer": key,
+                    "epoch": epoch_id,
+                    "job_group": df.sparkSession.sparkContext.getLocalProperty(
+                        "spark.jobGroup.id"
+                    ),
+                    "rows": len(df.collect()),
+                })
+
+            return write
+
+        fan_out = session_fanout(recorder("buy"), recorder("q2"), recorder("q3"))
+        ckpt = str(tmp_path_factory.mktemp(f"concurrent-ckpt-{i}"))
+        query = _fanout_writer(spark, src, fan_out, ckpt).start()
+        _drain(query)
+        runs.append((str(query.runId), records))
+    return runs
+
+
+def test_fanout_writers_run_concurrently(concurrent_fanout_runs):
+    """Every batch passed the 3-party barrier, so its three writers were in
+    flight together; writers run one after another would break it after
+    30 s and fail the query."""
+    for _run_id, records in concurrent_fanout_runs:
+        epochs = {r["epoch"] for r in records}
+        for key in ("buy", "q2", "q3"):
+            assert sorted(r["epoch"] for r in records if r["writer"] == key) == sorted(epochs)
+            assert sum(r["rows"] for r in records if r["writer"] == key) > 0, key
+
+
+def test_fanout_writer_jobs_stay_in_query_job_group(concurrent_fanout_runs):
+    """Each writer task inherits the foreachBatch thread's local properties:
+    its jobs carry the query's job group, which query.stop() cancels."""
+    for run_id, records in concurrent_fanout_runs:
+        assert records
+        assert {r["job_group"] for r in records} == {run_id}
+
+
+def test_fanout_writer_pool_stays_at_three_threads(concurrent_fanout_runs):
+    """One process-wide pool, one thread per writer: two queries and their
+    micro-batches never grow it past three threads."""
+    import threading
+
+    from flink_clickstream_processor_msk_spark.streaming.pipeline import (
+        FANOUT_THREAD_PREFIX,
+    )
+
+    n_batches = sum(
+        len({r["epoch"] for r in records}) for _, records in concurrent_fanout_runs
+    )
+    assert n_batches >= 10
+    pool_threads = [
+        t for t in threading.enumerate() if t.name.startswith(FANOUT_THREAD_PREFIX)
+    ]
+    assert 1 <= len(pool_threads) <= 3
+
+
+def test_fanout_failure_waits_for_every_writer_then_raises_first_in_order(
+    spark, tmp_path_factory
+):
+    """A failing writer does not stop the others: the batch fails only
+    after the slow writer has finished, and with the error of the first
+    failing writer in writer order (buy), not the first to fail in time
+    (Q3)."""
+    import threading
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
+    from flink_clickstream_processor_msk_spark.streaming.pipeline import (
+        session_fanout,
+    )
+
+    src = str(tmp_path_factory.mktemp("failing-src"))
+    _append_files(spark, src, [EVENTS[:2]])
+    slow_done = threading.Event()
+    done_when_raised: list[bool] = []
+
+    def write_buy(_df, _epoch):
+        time.sleep(0.5)
+        raise RuntimeError("buy writer failed")
+
+    def write_q2(_df, _epoch):
+        time.sleep(1.5)
+        slow_done.set()
+
+    def write_q3(_df, _epoch):
+        raise RuntimeError("q3 writer failed")
+
+    inner = session_fanout(write_buy, write_q2, write_q3)
+
+    def fan_out(df, epoch_id):
+        try:
+            inner(df, epoch_id)
+        except Exception:
+            done_when_raised.append(slow_done.is_set())
+            raise
+
+    ckpt = str(tmp_path_factory.mktemp("failing-ckpt"))
+    query = _fanout_writer(spark, src, fan_out, ckpt).start()
+    with pytest.raises(StreamingQueryException) as failure:
+        _drain(query)
+    assert done_when_raised == [True]
+    assert "buy writer failed" in str(failure.value)
+    assert "q3 writer failed" not in str(failure.value)
+
+
+def test_fanout_derivations_are_built_once(spark, tmp_path_factory, monkeypatch):
+    """session_fanout builds the buy/Q2/Q3 expressions when it is called:
+    with every expression constructor they use made to raise afterwards,
+    the micro-batches still deliver rows to all three writers."""
+    from pyspark.sql import functions as F
+
+    from flink_clickstream_processor_msk_spark.streaming.pipeline import (
+        session_fanout,
+    )
+
+    src = str(tmp_path_factory.mktemp("built-once-src"))
+    _append_files(spark, src, [
+        # user 1's buy session closes once user 2's event sets the watermark
+        [
+            {"ts": BASE_TS, "seq": 1, "userid": 1, "event_type": "view", "product_type": "books"},
+            {"ts": BASE_TS + 200, "seq": 2, "userid": 1, "event_type": "order_checkout", "product_type": "N/A"},
+            {"ts": BASE_TS + 5_000, "seq": 3, "userid": 2, "event_type": "view", "product_type": "garden"},
+        ],
+        [{"ts": BASE_TS + 9_000, "seq": 4, "userid": 3, "event_type": "view", "product_type": "toys"}],
+    ])
+    collected: dict[str, list] = {"buy": [], "q2": [], "q3": []}
+
+    def collector(key):
+        def write(df, _epoch):
+            collected[key].extend(df.collect())
+
+        return write
+
+    fan_out = session_fanout(collector("buy"), collector("q2"), collector("q3"))
+    writer = _fanout_writer(
+        spark, src, fan_out, str(tmp_path_factory.mktemp("built-once-ckpt"))
+    )
+
+    def refuse(*_args, **_kwargs):
+        raise AssertionError("fan-out expression built per micro-batch")
+
+    for name in ("col", "lit", "when", "count", "window", "window_time",
+                 "explode", "unix_millis"):
+        monkeypatch.setattr(F, name, refuse)
+    query = writer.start()
+    _drain(query)
+    monkeypatch.undo()
+    assert len(query.recentProgress) >= 2
+    assert all(collected.values()), {k: len(v) for k, v in collected.items()}
+
+
+def test_single_pass_late_drops_match_watermark_model(spark, tmp_path_factory):
+    """Late drops are counted, never silently lost: a seeded ClickEvent set
+    replayed out of order, one file per trigger, through the single-pass
+    fan-out. The engine's summed numRowsDroppedByWatermark equals the
+    zero-slack watermark model's count (reference_model.late_drops), and
+    the merged outputs equal the pure-Python streaming model's
+    (reference_model.stream_sessions). The set holds a straggler that
+    arrives after its session was emitted without being late itself: it
+    opens a second session, which a batch run over the admitted events
+    would merge into the first."""
+    import random
+
+    from flink_clickstream_processor_msk_spark.streaming.pipeline import (
+        merge_department_counts_partials,
+        merge_session_stats_partials,
+        session_fanout,
+    )
+    from reference_model import (
+        clickstream_outputs,
+        late_drops,
+        sessionize_events,
+        stream_sessions,
+    )
+
+    rng = random.Random(20261017)
+    events, seq = [], 0
+    for user in range(1, 9):
+        t = BASE_TS + rng.randrange(4_000)
+        while t < BASE_TS + 40_000:  # sessions of 1-3 events, 200 ms apart
+            for _ in range(rng.randint(1, 3)):
+                seq += 1
+                events.append({
+                    "ts": t, "seq": seq, "userid": user,
+                    "event_type": rng.choice(["view", "view", "order_checkout"]),
+                    "product_type": rng.choice(["books", "garden", "toys", "N/A"]),
+                })
+                t += 200
+            t += rng.randrange(1_500, 6_000)
+    # out-of-order arrival: each event sorts by its time plus up to 20 s
+    events.sort(key=lambda e: e["ts"] + rng.randrange(20_000))
+    files = [events[i:i + 20] for i in range(0, len(events), 20)] + [[SENTINEL]]
+
+    n_late = sum(map(sum, late_drops([[e["ts"] for e in f] for f in files])))
+    assert n_late > 0
+    sessions = stream_sessions(files)
+    admitted = [e for _, session in sessions for e in session]
+    n_batch_sessions = sum(
+        len(sessionize_events([e for e in admitted if e["userid"] == u]))
+        for u in {e["userid"] for e in admitted}
+    )
+    assert len(sessions) > n_batch_sessions, "no reopened session in the set"
+    want = clickstream_outputs(sessions)
+
+    src = str(tmp_path_factory.mktemp("late-model-src"))
+    _append_files(spark, src, files)
+    collected: dict[str, list] = {"buy": [], "q2": [], "q3": []}
+
+    def collector(key):
+        def write(df, _epoch):
+            collected[key].extend(r.asDict() for r in df.collect())
+
+        return write
+
+    fan_out = session_fanout(collector("buy"), collector("q2"), collector("q3"))
+    ckpt = str(tmp_path_factory.mktemp("late-model-ckpt"))
+    query = _fanout_writer(spark, src, fan_out, ckpt).start()
+    _drain(query)
+
+    dropped = sum(
+        op.numRowsDroppedByWatermark
+        for p in query.recentProgress
+        for op in p.stateOperators
+    )
+    assert dropped == n_late
+
+    def drop_none(_row):
+        return False  # the sentinel's session never closes: no row to drop
+
+    merged = {
+        "session_stats": merge_session_stats_partials(
+            spark.createDataFrame(collected["q2"])
+        ),
+        "department_counts": merge_department_counts_partials(
+            spark.createDataFrame(collected["q3"])
+        ),
+    }
+    for key, df in merged.items():
+        assert _canon(_rows(spark, df, drop_none)) == _canon(
+            _sorted_records(want[key], drop_none)
+        ), key
+    assert want["buy"]
+    assert _canon(_sorted_records(collected["buy"], drop_none)) == _canon(
+        _sorted_records(want["buy"], drop_none)
+    )
