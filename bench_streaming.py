@@ -18,6 +18,12 @@ production-default mode (single_pass — the measured winner; decision
 recorded in BASELINE.md/PLANS.md), so the regression check is not anchored
 to a lucky best-of-N run; best/min sit in the spread.
 
+Each ``modes`` entry also carries the trigger's fixed cost, read from
+``streaming/metrics.BatchMetricsListener`` over the mode's timed runs:
+``fixed_ms_p50`` (triggerExecution - addBatch: source listing, offset and
+commit logs, planning) and ``state_commit_ms_p50`` (inside addBatch), each
+the median over the triggers that read input (all triggers if none did).
+
 Prints one JSON line:
     {"metric": "streaming_events_per_sec", "value": N, "unit": "events/sec",
      "mode": "...", "events": n, "wall_sec": s,
@@ -29,6 +35,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -49,9 +56,10 @@ def _streams(spark, src: str, schema):
     return with_event_time(clickevents_from_events(raw), watermark="0 seconds")
 
 
-def _run_multi_query(spark, src: str, schema) -> float:
+def _run_multi_query(spark, src: str, schema) -> tuple[float, list[str]]:
     """Three-query fan-out (streaming/job.py run() topology, noop sinks);
-    returns wall seconds from query start to all-processed.
+    returns wall seconds from query start to all-processed, and the query
+    ids.
 
     Sink set matches the reference job graph (CP:227,240,251 — and the same
     three streams again at the ES sinks, CP:265-267): buy-filtered sessions,
@@ -88,10 +96,10 @@ def _run_multi_query(spark, src: str, schema) -> float:
     wall = time.perf_counter() - start
     for path in ckpts:
         shutil.rmtree(path, ignore_errors=True)
-    return wall
+    return wall, [str(q.id) for q in queries]
 
 
-def _run_single_pass(spark, src: str, schema) -> float:
+def _run_single_pass(spark, src: str, schema) -> tuple[float, list[str]]:
     """Single-query foreachBatch fan-out (streaming/job.py run_single_pass()
     topology): sessionize once, derive buy/Q2/Q3 per micro-batch, noop
     batch writes standing in for the three Kafka topics."""
@@ -120,10 +128,10 @@ def _run_single_pass(spark, src: str, schema) -> float:
     q.stop()
     wall = time.perf_counter() - start
     shutil.rmtree(ckpt, ignore_errors=True)
-    return wall
+    return wall, [str(q.id)]
 
 
-def _run_single_pass_rocksdb(spark, src: str, schema) -> float:
+def _run_single_pass_rocksdb(spark, src: str, schema) -> tuple[float, list[str]]:
     """The production-default topology on the DISK-BACKED RocksDB state
     store (session.py ROCKSDB_STATE_STORE_PROVIDER) — the provider a
     100 TB job runs, where session state must not live in executor heap.
@@ -137,6 +145,20 @@ def _run_single_pass_rocksdb(spark, src: str, schema) -> float:
         return _run_single_pass(spark, src, schema)
 
 
+def _trigger_costs(records: list[dict]) -> dict:
+    """Median fixed cost and state commit time per trigger."""
+    data = [r for r in records if r["num_input_rows"] > 0] or records
+    return {
+        "fixed_ms_p50": statistics.median(
+            r["duration_ms"]["triggerExecution"] - r["duration_ms"]["addBatch"]
+            for r in data
+        ),
+        "state_commit_ms_p50": statistics.median(
+            r["state_commit_ms"] for r in data
+        ),
+    }
+
+
 MODES = {
     "multi_query": _run_multi_query,
     "single_pass": _run_single_pass,
@@ -148,6 +170,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from flink_clickstream_processor_msk_spark import get_spark
+    from flink_clickstream_processor_msk_spark.streaming.metrics import (
+        attach_metrics,
+    )
 
     spark = get_spark(app_name="bench-streaming")
     src_file = f"{sf_dir}/events.parquet"
@@ -181,9 +206,15 @@ def main() -> None:
     # sustained load (BASELINE.md caveat), so a single pass can read 20-30%
     # low; the spread pins the band, the MEDIAN is the reported value
     n_runs = max(1, int(os.environ.get("BENCH_STREAMING_RUNS", "3")))
+    listener = attach_metrics(spark)
     modes_out = {}
     for mode, run in MODES.items():
-        walls = sorted(run(spark, src, schema) for _ in range(n_runs))
+        walls, ids = [], []
+        for _ in range(n_runs):
+            wall, run_ids = run(spark, src, schema)
+            walls.append(wall)
+            ids.extend(run_ids)
+        walls.sort()
         med_wall = walls[len(walls) // 2]
         modes_out[mode] = {
             "events_per_sec": round(n_events / med_wall, 1),
@@ -194,7 +225,9 @@ def main() -> None:
                 "max": round(n_events / walls[0], 1),
                 "n": n_runs,
             },
+            **_trigger_costs(listener.for_stopped(ids)),
         }
+    spark.streams.removeListener(listener)
     shutil.rmtree(src, ignore_errors=True)
 
     # events/s is pipeline-level: source events fully processed through all

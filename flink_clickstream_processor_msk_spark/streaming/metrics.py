@@ -23,20 +23,39 @@ from typing import Any
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+#: ``durationMs`` phases of one trigger, in execution order;
+#: ``triggerExecution`` is the whole trigger, the other five included.
+#: A phase a trigger did not run (a trigger with no new offsets skips all
+#: but latestOffset) reads 0.
+TRIGGER_PHASES = (
+    "latestOffset",
+    "walCommit",
+    "queryPlanning",
+    "addBatch",
+    "commitOffsets",
+    "triggerExecution",
+)
+
 
 class BatchMetricsListener(StreamingQueryListener):
     """Record per-batch progress for every streaming query on the session.
 
     Each entry: query name/id, batchId, numInputRows, input/processed
-    rows-per-second, event-time watermark, and total state rows across
-    stateful operators (session windows, tumbling aggs, dedup state)."""
+    rows-per-second, event-time watermark, total state rows across
+    stateful operators (session windows, tumbling aggs, dedup state),
+    ``duration_ms`` (the ``TRIGGER_PHASES`` walls) and ``state_commit_ms``
+    (state-store commit time summed over the stateful operators).
+    ``triggerExecution - addBatch`` is the trigger's fixed cost outside
+    the batch's jobs: source listing, offset and commit logs, planning.
+    State commits run inside addBatch's tasks, hence their own field."""
 
     def __init__(self, max_entries: int = 10_000) -> None:
         # the listener bus appends from its own thread while callers read;
         # snapshot/append under a lock (iterating a deque that another
         # thread mutates raises RuntimeError)
-        self._lock = threading.Lock()
+        self._lock = threading.Condition()
         self.records: deque[dict[str, Any]] = deque(maxlen=max_entries)
+        self._terminated: set[str] = set()
 
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
         pass
@@ -55,6 +74,13 @@ class BatchMetricsListener(StreamingQueryListener):
                     "processed_rows_per_sec": p.processedRowsPerSecond,
                     "watermark": p.eventTime.get("watermark"),
                     "state_rows": state_rows,
+                    "duration_ms": {
+                        phase: p.durationMs.get(phase, 0)
+                        for phase in TRIGGER_PHASES
+                    },
+                    "state_commit_ms": sum(
+                        op.commitTimeMs for op in p.stateOperators
+                    ),
                 }
             )
 
@@ -62,12 +88,28 @@ class BatchMetricsListener(StreamingQueryListener):
         pass
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
+        with self._lock:
+            self._terminated.add(str(event.id))
+            self._lock.notify_all()
 
     def for_query(self, name: str) -> list[dict[str, Any]]:
         with self._lock:
             snapshot = list(self.records)
         return [r for r in snapshot if r["name"] == name]
+
+    def for_stopped(self, ids, timeout: float = 60.0) -> list[dict[str, Any]]:
+        """Records of the stopped queries ``ids``, once the bus has
+        delivered each one's termination event (it follows the query's
+        last progress event); raises ``TimeoutError`` otherwise."""
+        ids = {str(i) for i in ids}
+        with self._lock:
+            if not self._lock.wait_for(
+                lambda: ids <= self._terminated, timeout=timeout
+            ):
+                raise TimeoutError(
+                    f"no termination event for {sorted(ids - self._terminated)}"
+                )
+            return [r for r in self.records if r["id"] in ids]
 
 
 def attach_metrics(spark, max_entries: int = 10_000) -> BatchMetricsListener:

@@ -263,7 +263,47 @@ def test_restart_recovery_on_rocksdb_state_store(spark, tmp_path_factory):
         _restart_fanout_scenario(spark, tmp_path_factory)
 
 
-def _restart_fanout_scenario(spark, tmp_path_factory):
+CHECKPOINT_FILE_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def test_local_session_writes_checkpoints_through_file_system_manager(spark):
+    """A local master pins Spark's FileSystem checkpoint manager: the
+    FileContext default forks 4 readlink processes per checkpoint file
+    on a machine without libhadoop (session.get_spark)."""
+    from flink_clickstream_processor_msk_spark.session import (
+        FILE_SYSTEM_CHECKPOINT_FILE_MANAGER,
+    )
+
+    assert spark.sparkContext.master.startswith("local")
+    assert (
+        spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF)
+        == FILE_SYSTEM_CHECKPOINT_FILE_MANAGER
+    )
+
+
+def test_restart_resumes_checkpoint_written_by_file_context_manager(
+    spark, tmp_path_factory
+):
+    """A checkpoint written under Spark's FileContext default (the manager
+    local sessions used before) resumes under the session's FileSystem
+    manager with no migration: the open session survives the switch and
+    the merged Q2/Q3 and buy records still equal batch."""
+    _restart_fanout_scenario(
+        spark,
+        tmp_path_factory,
+        phase1_manager=FILE_CONTEXT_CHECKPOINT_FILE_MANAGER,
+    )
+
+
+def _restart_fanout_scenario(spark, tmp_path_factory, phase1_manager=None):
+    """Stop a single-pass fan-out with a session open, restart it from the
+    same checkpoint and compare with batch. ``phase1_manager``, if given,
+    writes the first query's checkpoint (the conf is read at query start);
+    the restarted query uses the session's manager."""
     from flink_clickstream_processor_msk_spark.operators.sessionize import (
         sessionize,
     )
@@ -330,7 +370,12 @@ def _restart_fanout_scenario(spark, tmp_path_factory):
     # phase 1: user 1's whole session + the FIRST half of user 2's
     append_chunk(events[:2])
     append_chunk([events[2]])
-    q = start_query()
+    session_manager = spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF)
+    spark.conf.set(CHECKPOINT_FILE_MANAGER_CONF, phase1_manager or session_manager)
+    try:
+        q = start_query()
+    finally:
+        spark.conf.set(CHECKPOINT_FILE_MANAGER_CONF, session_manager)
     q.processAllAvailable()
     q.stop()
     # user 1's buy session was delivered pre-stop; user 2's is still open
@@ -875,8 +920,9 @@ def test_es_sinks_live_http_stub_backoff_and_restart(spark, tmp_path_factory):
 
 def test_batch_metrics_listener_records_progress(spark, tmp_path_factory):
     """Observability parity (the reference's KDA jobs get CloudWatch
-    metrics for free): the listener captures per-batch input rows and the
-    stateful operators' state-row totals for a named streaming query."""
+    metrics for free): the listener captures per-batch input rows, the
+    stateful operators' state-row totals and commit time, and the trigger
+    phase walls for a named streaming query."""
     from flink_clickstream_processor_msk_spark.streaming.metrics import (
         attach_metrics,
     )
@@ -895,18 +941,23 @@ def test_batch_metrics_listener_records_progress(spark, tmp_path_factory):
         )
         q.processAllAvailable()
         q.stop()
-        # listener events are delivered asynchronously after the batch
-        import time
-
-        for _ in range(50):
-            if listener.for_query("metrics_sessions"):
-                break
-            time.sleep(0.2)
-        recs = listener.for_query("metrics_sessions")
+        # listener events are delivered asynchronously; the termination
+        # event follows the query's last progress event on the bus
+        recs = listener.for_stopped([q.id])
         assert recs, "no progress events captured"
+        assert recs == listener.for_query("metrics_sessions")
         assert sum(r["num_input_rows"] for r in recs) == len(EVENTS)
         assert all("state_rows" in r and "batch_id" in r for r in recs)
         assert any(r["processed_rows_per_sec"] >= 0 for r in recs)
+        phases = {
+            "latestOffset", "queryPlanning", "walCommit", "addBatch",
+            "commitOffsets", "triggerExecution",
+        }
+        for r in recs:
+            d = r["duration_ms"]
+            assert set(d) == phases
+            assert d["triggerExecution"] >= d["addBatch"]
+            assert r["state_commit_ms"] >= 0
     finally:
         spark.streams.removeListener(listener)
 
