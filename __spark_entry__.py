@@ -425,7 +425,8 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     EAGER-localCheckpoint-backed since r15 (previously a MEMORY_AND_DISK
     persist). VERDICT r14 #1 suspected the persist was being EVICTED
     mid-suite (consumers read 2.5-4× baseline in the driver window);
-    tools/measure_pairs_block.py adjudicated it: the artifact is ~2 MB,
+    PLANS.md "Round-15 measured scaling notes" adjudicated it: the
+    artifact is ~2 MB,
     its cached-partition deficit stayed 0 even under 52 GB of
     block-manager residue with forced spill (MEMORY_AND_DISK spills to
     disk, never recomputes), and the consumers read AT baseline best

@@ -56,29 +56,24 @@ def build_contract_line(total: float, n_queries: int, sf_dir: str) -> str:
     return line
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def warm_up(spark, sf_dir: str) -> None:
+    """Generic warm-up so the first timed query isn't charged for one-time
+    runtime costs (measured: first run of a query shape is 3-5x its steady
+    state): JVM JIT, whole-stage codegen, the Arrow/pandas Python worker
+    pool (spark.python.worker.reuse keeps them alive), and the
+    session-window state machinery. Operator cost is what the bench
+    measures."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    import __spark_entry__ as entry_mod
-    from flink_clickstream_processor_msk_spark import get_spark
-
-    spark = get_spark(app_name="bench")
-
-    # Warmup so the first timed query isn't charged for one-time runtime
-    # costs (measured: first run of a query shape is 3-5x its steady state):
-    # JVM JIT, whole-stage codegen, the Arrow/pandas Python worker pool
-    # (spark.python.worker.reuse keeps them alive), and the session-window
-    # state machinery. Operator cost is what the bench measures.
     spark.range(10_000_000).selectExpr("sum(id)").write.format("noop").mode(
         "overwrite"
     ).save()
     spark.read.parquet(f"{sf_dir}/events.parquet").limit(1000).write.format(
         "noop"
     ).mode("overwrite").save()
-    # pandas-UDF worker pool (one per core)
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
+    # pandas-UDF worker pool (one per core)
     @pandas_udf("long", PandasUDFType.SCALAR)
     def _warm(s):
         return s
@@ -95,6 +90,50 @@ def main() -> None:
         F.count("*"), F.collect_set("k")
     ).write.format("noop").mode("overwrite").save()
 
+
+def run_query(spark, sf_dir: str, name: str, fn) -> tuple[float, float]:
+    """One timed run of a declared query; returns (timed_s, warm_s).
+
+    Probe/consumer queries read amortized session-cached artifacts (ANN
+    indexes, the near-dup pairs table): their ``CACHE_DEPS`` are re-warmed
+    UNTIMED first, so the timing measures the query's own work over the
+    artifact, not a rebuild the cluster usage model amortizes away.
+    Builder queries declare no deps and pay their full pipeline cost. The
+    warm wall is returned too: a warm that inflates alongside the timed
+    run marks a host stall window, not an artifact problem (eviction was
+    refuted: partition deficit 0 under 52 GB of induced residue, PLANS.md
+    "Round-15 measured scaling notes").
+
+    The timed region is construction + execution (iterative operators,
+    e.g. connected components, run distributed jobs during construction)
+    through the noop sink. ``clearCache`` afterwards drops what the run
+    persisted (dedup signature tables, the re-warmed artifacts), so the
+    cache neither accumulates nor leaks a materialized result into the
+    next timing.
+    """
+    import __spark_entry__ as entry_mod
+
+    warm_start = time.perf_counter()
+    entry_mod.warm_caches(spark, sf_dir, entry_mod.CACHE_DEPS.get(name, ()))
+    warm_s = time.perf_counter() - warm_start
+    start = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    timed_s = time.perf_counter() - start
+    spark.catalog.clearCache()
+    return timed_s, warm_s
+
+
+def main() -> None:
+    import statistics
+
+    import __spark_entry__ as entry_mod
+    from flink_clickstream_processor_msk_spark import get_spark
+    from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
+
+    sf_dir = DEFAULT_SF_DIR
+    spark = get_spark(app_name="bench")
+    warm_up(spark, sf_dir)
+
     # best-of-2 per query: even with the generic warmup above, the first
     # execution of a specific plan still pays its own whole-stage-codegen
     # compile (~2x measured on Q1); the second run is steady state, which is
@@ -102,7 +141,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread: dict[str, dict[str, float]] = {}
     for name, fn in entry_mod.queries().items():
-        deps = entry_mod.CACHE_DEPS.get(name, ())
         runs: list[float] = []
         warms: list[float] = []
         # best-of-2, adaptively extended: a transient host/JVM stall (this
@@ -114,43 +152,20 @@ def main() -> None:
             and min(runs) > 0.5
             and (max(runs) / min(runs) > 2.5 or min(runs) > 3.0)
         ):
-            # probe/consumer queries read amortized session-cached
-            # artifacts (ANN indexes, the near-dup pairs table) — re-warm
-            # exactly those deps UNTIMED after the clearCache below, so the
-            # timing measures the query's own work over the artifact, not a
-            # rebuild the cluster usage model amortizes away. Builder
-            # queries declare no deps and pay their full pipeline cost.
-            # r15 instrumentation (VERDICT r14 #1 adjudication): record the
-            # UNTIMED warm wall per run — a warm that inflates alongside the
-            # timed run marks a host stall window, not an artifact problem
-            # (eviction was refuted in tools/measure_pairs_block.py:
-            # partition deficit 0 under 52 GB of induced residue)
-            warm_start = time.perf_counter()
-            entry_mod.warm_caches(spark, sf_dir, deps)
-            warms.append(time.perf_counter() - warm_start)
-            # time construction + execution: iterative operators (e.g.
-            # connected components) run distributed jobs during construction
-            start = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - start)
-            # dedup operators persist signature tables for their self-joins;
-            # drop them between runs so the cache doesn't accumulate or leak
-            # a materialized result into the next timing
-            spark.catalog.clearCache()
+            timed_s, warm_s = run_query(spark, sf_dir, name, fn)
+            runs.append(timed_s)
+            warms.append(warm_s)
         timings[name] = round(min(runs), 3)
         # min is the headline (steady state), but min-of-N structurally
         # hides bimodal queries (a 2.5 s / 70 s alternator reports 2.5 s) —
         # record the full spread so variance is visible per round
-        import statistics
-
         spread[name] = {
             "min": round(min(runs), 3),
             "med": round(statistics.median(runs), 3),
             "max": round(max(runs), 3),
             "n": len(runs),
         }
-        if deps:
+        if entry_mod.CACHE_DEPS.get(name):
             spread[name]["warm_min"] = round(min(warms), 3)
             spread[name]["warm_max"] = round(max(warms), 3)
 

@@ -48,12 +48,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR  # noqa: E402
+
 N_BATCHES = int(os.environ.get("BENCH_INGEST_BATCHES", "10"))
 N_RUNS = int(os.environ.get("BENCH_INGEST_RUNS", "3"))
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
 
     from flink_clickstream_processor_msk_spark import get_spark
     from flink_clickstream_processor_msk_spark.streaming.ingest import (
@@ -164,7 +166,7 @@ def pq_retrain_mode() -> None:
     shows its spike), the re-train wall alone, and recall@K of drifted
     queries (exact squared-L2 truth — PQ's own metric, per the CLAUDE.md
     per-metric rule) on the re-trained vs the stale twin."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     n_batches = int(os.environ.get("BENCH_INGEST_BATCHES", "10"))
     # +0.5 pure translation of a DISJOINT id half, exactly the round-8
     # drift experiment's setup (tools/measure_index_drift.py): translation
@@ -360,7 +362,7 @@ def pq_policy_mode() -> None:
     Pass criterion: recall_policy holds (≫ oneshot ≈ stale ≈ 0) and the
     policy's re-train count stays bounded (cost amortizes over a growth
     factor, not per batch)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     n_batches = int(os.environ.get("BENCH_INGEST_BATCHES", "10"))
     growth_fraction = float(os.environ.get("BENCH_INGEST_GROWTH", "0.2"))
     drift_shift = 0.5
@@ -524,7 +526,7 @@ def dsir_quality_mode() -> None:
     against the written ratio table + train-time cutoff. Signal: the
     per-epoch curve — handles resolve at epoch 0, steady state pays one
     broadcast scoring join per batch."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     n_batches = int(os.environ.get("BENCH_INGEST_BATCHES", "10"))
 
     from flink_clickstream_processor_msk_spark import get_spark
@@ -603,7 +605,7 @@ def semdedup_mode() -> None:
     index, emits keep/drop flags, and folds in. Per-epoch curve shows
     whether probe cost tracks touched-cell occupancy (it grows as cells
     fill — the k-knob trade measured in PLANS.md round-11)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     n_batches = int(os.environ.get("BENCH_INGEST_BATCHES", "10"))
 
     from flink_clickstream_processor_msk_spark import get_spark
@@ -670,7 +672,7 @@ def corpus_semantic_mode() -> None:
     batch. Reports whole-run docs/sec plus each leg's outputs so the
     composition cost is comparable against the standalone legs
     (semdedup_mode, lm_quality_mode, the default dedup leg)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     n_batches = int(os.environ.get("BENCH_INGEST_BATCHES", "10"))
 
     from flink_clickstream_processor_msk_spark import get_spark
@@ -793,7 +795,7 @@ def tokenizer_mode() -> None:
     (tokenizer_ingest_sink, drift monitor off): per micro-batch, one
     Arrow encode pass under the saved tokenizer — the packing/sizing
     unit every shard needs before batch assembly."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     n_batches = int(os.environ.get("BENCH_INGEST_BATCHES", "10"))
 
     from flink_clickstream_processor_msk_spark import get_spark
@@ -851,7 +853,7 @@ def lm_quality_mode() -> None:
     against the written LM. The signal is the per-epoch curve: handles
     resolve once at epoch 0, steady-state epochs pay only the scoring
     joins over the persisted LM tables."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     n_batches = int(os.environ.get("BENCH_INGEST_BATCHES", "10"))
 
     from flink_clickstream_processor_msk_spark import get_spark

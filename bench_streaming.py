@@ -42,6 +42,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR  # noqa: E402
+
 # the production default fan-out architecture (BASELINE.md decision row)
 DEFAULT_MODE = "single_pass"
 
@@ -167,7 +169,7 @@ MODES = {
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
 
     from flink_clickstream_processor_msk_spark import get_spark
     from flink_clickstream_processor_msk_spark.streaming.metrics import (

@@ -1119,16 +1119,16 @@ def connected_components(
     propagation it replaced (round 12) converged in O(component diameter)
     rounds — a transitive dup CHAIN of length L (exactly what near-dup
     families produce) cost L join+groupBy rounds; the star alternation
-    takes ~log L (measured: tools/measure_cc_rounds.py — a 1200-edge
-    chain converges in 12 rounds / 10.5 s vs 1201 diameter-bound rounds
-    / ~498 s projected from the measured per-round cost, PLANS.md
-    round-12). Convergence is detected by an edge-set fingerprint
+    takes ~log L (measured, PLANS.md "Round-12 measured scaling notes":
+    a 1200-edge chain converges in 12 rounds / 10.5 s vs 1201
+    diameter-bound rounds / ~498 s projected from the measured per-round
+    cost). Convergence is detected by an edge-set fingerprint
     (count + sum of xxhash64, the cheap per-round check) and CONFIRMED
     with one exceptAll equality job before returning — the fingerprint
     never decides alone. Both paths produce the same deterministic output
     (min id) — hash-comparable against the DuckDB recursive-CTE oracle.
     ``stats``: optional dict that receives ``{"path": "driver"|"star",
-    "rounds": n}`` — the observability hook tools/measure_cc_rounds.py
+    "rounds": n}`` — the observability hook the round-12 measurement
     and the chain test read.
     """
     spark = edges.sparkSession
@@ -1277,8 +1277,8 @@ def minhash_duplicate_families(
     :func:`connected_components` (pass 0 to force the distributed
     star path; ``cc_stats`` receives its ``{"path", "rounds"}``
     observability dict, with ``path="driver", rounds=0`` when this
-    function's own union-find fast path answers first) — the hooks
-    tools/measure_family_star_path.py drives.
+    function's own union-find fast path answers first) — the hooks the
+    PLANS.md "Round-13 measured scaling notes" measurement drove.
     """
     from collections import Counter
 

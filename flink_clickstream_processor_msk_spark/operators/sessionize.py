@@ -21,10 +21,10 @@ Scale notes: one shuffle on userid; per-session state is bounded by the
 session gap (collect_list holds one session's events, not history); the
 aggregation is partial/final (map-side combine) for count/collect_set and
 spill-safe. Hot-KEY skew is NOT AQE-splittable (aggregation keys hash to
-one task; AQE's skew handling is join-side only — measured in
-tools/measure_q1_skew.py): a user carrying a corpus-scale share of events
-routes through :func:`sessionize_two_phase`, the time-salted exact
-variant.
+one task; AQE's skew handling is join-side only — measured, PLANS.md
+"Round-14 measured scaling notes"): a user carrying a corpus-scale share
+of events routes through :func:`sessionize_two_phase`, the time-salted
+exact variant.
 """
 
 from __future__ import annotations
@@ -163,7 +163,8 @@ def sessionize_two_phase(
     a user carrying 20 % of the corpus sends 20 % of all events through
     ONE task, and AQE cannot split a skewed AGGREGATION key (its skew
     handling is join-side only; the module-header claim this replaces
-    was measured wrong, tools/measure_q1_skew.py). The standard fix is
+    was measured wrong, PLANS.md "Round-14 measured scaling notes"). The
+    standard fix is
     salted pre-aggregation (skew.py precedent), and session windows
     admit a TIME-based salt that stays semantically exact:
 

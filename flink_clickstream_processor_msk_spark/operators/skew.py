@@ -12,7 +12,7 @@ The engine's layered skew story at 100 TB:
    even after AQE splits its partition, because every row of the key
    lands in one hash bucket on the BUILD side too. Salting splits the hot
    key's rows across ``n_salt`` reducers by widening the join key.
-   Measured (tools/measure_salted_join.py, PLANS.md round 7): 3.1× on an
+   Measured (PLANS.md "Round-7 additions"): 3.1× on an
    8M-row 90%-one-key join with broadcast disabled and AQE on — the hot
    partition sits below AQE's skewedPartitionThresholdInBytes, so
    OptimizeSkewedJoin never fires while one task carries 90% of the work;

@@ -5,6 +5,10 @@ LAST line. Rounds 5 and 9 both shipped `parsed: null` because a per-query
 dict rode on that line and outgrew the tail as query count grew. These
 tests pin the fix: the contract line is O(1)-sized in query count and
 parses out of a simulated truncated tail no matter how many queries run.
+
+The last test pins ``bench.run_query``, the one timing loop bench.py and
+the tools/ harnesses share: CACHE_DEPS warm untimed, then the timed
+construction + noop write, then clearCache.
 """
 
 from __future__ import annotations
@@ -12,12 +16,14 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import CONTRACT_LINE_MAX_BYTES, build_contract_line
+import __spark_entry__ as entry_mod  # noqa: E402
+from bench import CONTRACT_LINE_MAX_BYTES, build_contract_line, run_query  # noqa: E402
 
 DRIVER_TAIL_BYTES = 2000
 
@@ -75,3 +81,31 @@ def test_contract_line_is_small_and_fixed_size():
 def test_contract_line_rejects_oversize():
     with pytest.raises(ValueError):
         build_contract_line(1.0, 1, "x" * (CONTRACT_LINE_MAX_BYTES + 1))
+
+
+def test_run_query_warms_deps_untimed_then_times_and_clears_cache(spark, monkeypatch):
+    calls = []
+
+    def slow_warm(spark_, sf_dir, deps):
+        calls.append(("warm", sf_dir, tuple(deps)))
+        time.sleep(3)
+
+    monkeypatch.setattr(entry_mod, "warm_caches", slow_warm)
+    monkeypatch.setitem(entry_mod.CACHE_DEPS, "fake_probe", ("pairs", "lsh"))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def fn(spark_, sf_dir):
+        calls.append(("fn", sf_dir))
+        df = spark_.range(100).persist()
+        calls.append(("cached", not cache.isEmpty()))
+        return df
+
+    timed_s, warm_s = run_query(spark, "/sf", "fake_probe", fn)
+    assert calls == [
+        ("warm", "/sf", ("pairs", "lsh")),
+        ("fn", "/sf"),
+        ("cached", True),
+    ]
+    assert warm_s >= 3
+    assert timed_s < 3
+    assert cache.isEmpty()

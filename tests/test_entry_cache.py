@@ -4,8 +4,9 @@ runs) without silently degrading. Since r15 the pairs artifact is backed
 by an EAGER localCheckpoint instead of a CacheManager persist: the blocks
 live in the block manager, clearCache cannot strip them, and the cut
 lineage makes a silent md5-pipeline recompute impossible by construction
-(VERDICT r14 #1 adjudication — tools/measure_pairs_block.py refuted the
-eviction theory: partition deficit 0 under 52 GB of induced residue).
+(VERDICT r14 #1 adjudication — PLANS.md "Round-15 measured scaling
+notes" refuted the eviction theory: partition deficit 0 under 52 GB of
+induced residue).
 The BUILDER query (dedup_minhash_jaccard) deliberately bypasses the
 cache and pays the full pipeline per run (the CACHE_DEPS contract).
 """

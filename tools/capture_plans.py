@@ -25,10 +25,11 @@ def main() -> None:
     outdir, tag = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
     import __spark_entry__ as entry_mod
     from flink_clickstream_processor_msk_spark import get_spark
+    from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
+
+    sf_dir = DEFAULT_SF_DIR
 
     spark = get_spark(app_name="capture_plans")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

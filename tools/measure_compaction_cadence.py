@@ -43,7 +43,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
+
+SF_DIR = DEFAULT_SF_DIR
 SCRATCH = "/tmp/compaction_cadence_measure"
 ID_STRIDE = 10_000_000
 BATCH_SIZE = 500  # the bench_ingest cadence at sf0.1
@@ -57,6 +59,7 @@ COMPACT_AT = {10, 40, 160}  # depths (batches) to time compaction at
 
 
 def main() -> None:
+    from bench import warm_up
     from flink_clickstream_processor_msk_spark import get_spark
     from flink_clickstream_processor_msk_spark.operators import dedup
     from flink_clickstream_processor_msk_spark.streaming.ingest import (
@@ -64,9 +67,7 @@ def main() -> None:
     )
 
     spark = get_spark(app_name="measure_compaction_cadence")
-    spark.range(10_000_000).selectExpr("sum(id)").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark, SF_DIR)
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n_docs = docs.count()
@@ -80,7 +81,7 @@ def main() -> None:
     # fixed NOVEL probe batch: reversed text + marker token → disjoint
     # shingles from base AND from every delta batch, so pair output is ~0
     # at every depth and the curve isolates the delta-read term (the
-    # measure_incremental_probe novelty lesson)
+    # novelty lesson of PLANS.md "Round-7 additions", incremental probe)
     probe_docs = (
         docs.orderBy("doc_id")
         .limit(BATCH_SIZE)

@@ -43,7 +43,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
+
+SF_DIR = DEFAULT_SF_DIR
 K = 10
 BASE_N = 1000
 ID_SHIFT = 100_000

@@ -3,8 +3,9 @@
 Usage: python tools/measure_query.py <query> [<query> ...] [--n 5]
 
 Runs the named __spark_entry__.queries() entries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) with the same warmup + CACHE_DEPS re-warm
-discipline as bench.py, printing per-run timings so a BASELINE.md
+(default: the sf0.1 tier, ``sources.tables.DEFAULT_SF_DIR``) through
+bench.py's own ``warm_up`` and ``run_query`` (CACHE_DEPS re-warm, timed
+noop write, clearCache), printing per-run timings so a BASELINE.md
 "isolated best-of-N" row can be recorded.  Exists because CLAUDE.md's
 hard rule ("new driver queries need a BASELINE.md per-query row,
 isolated best-of-3 at sf0.1") was previously serviced by ad-hoc
@@ -15,7 +16,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -36,40 +36,20 @@ def main() -> None:
         print("usage: measure_query.py <query> [...] [--n 5]", file=sys.stderr)
         sys.exit(2)
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
     import __spark_entry__ as entry_mod
+    from bench import run_query, warm_up
     from flink_clickstream_processor_msk_spark import get_spark
-    from pyspark.sql import functions as F
+    from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
 
+    sf_dir = DEFAULT_SF_DIR
     spark = get_spark(app_name="measure_query")
-    # same generic warmup as bench.py: JIT, codegen, Arrow worker pool
-    spark.range(10_000_000).selectExpr("sum(id)").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    ncpu = spark.sparkContext.defaultParallelism
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    @pandas_udf("long", PandasUDFType.SCALAR)
-    def _warm(s):
-        return s
-
-    spark.range(ncpu * 4, numPartitions=ncpu).select(_warm("id")).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     qs = entry_mod.queries()
     for name in args:
-        fn = qs[name]
-        deps = entry_mod.CACHE_DEPS.get(name, ())
-        runs = []
-        for _ in range(n):
-            entry_mod.warm_caches(spark, sf_dir, deps)
-            start = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - start, 3))
-            spark.catalog.clearCache()
+        runs = [
+            round(run_query(spark, sf_dir, name, qs[name])[0], 3) for _ in range(n)
+        ]
         print(f"{name}: runs={runs} best={min(runs)}")
 
 

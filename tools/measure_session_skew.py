@@ -22,7 +22,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,8 +34,7 @@ def main() -> None:
     rep = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     hot_reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
+    from bench import run_query
     from flink_clickstream_processor_msk_spark import get_spark
     from flink_clickstream_processor_msk_spark.operators.sessionize import (
         driver_output,
@@ -47,6 +45,9 @@ def main() -> None:
         read_clickevents,
         with_event_time,
     )
+    from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
+
+    sf_dir = DEFAULT_SF_DIR
 
     spark = get_spark(app_name="measure_session_skew")
     base = with_event_time(read_clickevents(spark, sf_dir))
@@ -79,14 +80,16 @@ def main() -> None:
         n = ev.count()
         hot_n = ev.filter(F.col("userid") == HOT_USER).count()
         for shape, fn in (("one_phase", sessionize), ("two_phase", sessionize_two_phase)):
+            name = f"skew:{label}:{shape}"
             walls = []
             for _ in range(runs):
-                spark.sparkContext.setJobDescription(f"skew:{label}:{shape}")
-                t0 = time.perf_counter()
-                driver_output(fn(ev)).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                walls.append(round(time.perf_counter() - t0, 3))
+                spark.sparkContext.setJobDescription(name)
+                # no CACHE_DEPS under this name; the localCheckpointed
+                # input survives run_query's clearCache
+                timed_s, _ = run_query(
+                    spark, sf_dir, name, lambda s, d: driver_output(fn(ev))
+                )
+                walls.append(round(timed_s, 3))
             out[f"{label}:{shape}"] = {
                 "rows": n,
                 "hot_rows": hot_n,

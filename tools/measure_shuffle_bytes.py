@@ -5,10 +5,11 @@ from plan shapes.
 
 Usage: python tools/measure_shuffle_bytes.py <query> [<query> ...]
 
-For each named declared query: clearCache, re-warm its CACHE_DEPS
-(untimed, the bench contract), run the full plan through the noop sink
-under a dedicated job group, then sum shuffle-write bytes/records and
-input bytes over exactly the stages of that group's jobs. Prints one JSON
+For each named declared query: one bench.py ``run_query`` (CACHE_DEPS
+re-warm untimed, full plan through the noop sink, clearCache) whose
+construction and execution run under a dedicated job group, then sum
+shuffle-write bytes/records and input bytes over exactly the stages of
+that group's jobs. Prints one JSON
 line per query and a trailing summary dict.
 
 The UI/REST server is local (spark.ui.enabled defaults true); stage
@@ -36,10 +37,12 @@ def main() -> None:
     if not names:
         print("usage: measure_shuffle_bytes.py <query> [...]", file=sys.stderr)
         sys.exit(2)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
     import __spark_entry__ as entry_mod
+    from bench import run_query
     from flink_clickstream_processor_msk_spark import get_spark
+    from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
+
+    sf_dir = DEFAULT_SF_DIR
 
     # the engine session disables the UI (get_spark sets spark.ui.enabled
     # false); this harness needs the REST metrics endpoint, so re-enable
@@ -56,14 +59,15 @@ def main() -> None:
     qs = entry_mod.queries()
     out = {}
     for name in names:
-        deps = entry_mod.CACHE_DEPS.get(name, ())
-        spark.catalog.clearCache()
-        entry_mod.warm_caches(spark, sf_dir, deps)
-        sc.setJobGroup(f"msb:{name}", name)
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
+        fn = qs[name]
+
+        # the group is set as construction starts, after run_query's
+        # untimed CACHE_DEPS warm, so only the query's own jobs count
+        def grouped(spark, sf_dir, name=name, fn=fn):
+            sc.setJobGroup(f"msb:{name}", name)
+            return fn(spark, sf_dir)
+
+        wall, _ = run_query(spark, sf_dir, name, grouped)
         sc.setJobGroup("", "")
         time.sleep(0.5)  # let the listener drain
         jobs = _get(base, "/jobs")

@@ -19,13 +19,16 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import run_query, warm_up
+from flink_clickstream_processor_msk_spark import get_spark
+from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
+
+SF_DIR = DEFAULT_SF_DIR
 FACTOR = int(os.environ.get("SCALE_FACTOR", "10"))
 OUT_DIR = os.environ.get("SCALE_OUT_DIR", f"/tmp/scale{FACTOR}x")
 ID_STRIDE = 10_000_000
@@ -73,12 +76,8 @@ def build(spark: SparkSession, sf_dir: str, out_dir: str, factor: int) -> None:
     # events: ts passes through unchanged (timestamp[us] in current tiers)
     # so the replicated file re-reads through the same clickevents shim
     # branch; users/seqs shifted so each replica is a disjoint population
-    # of sessions. Legacy TIMESTAMP(NANOS) tiers need the nanosAsLong conf
-    # (best-effort, like sources/clickevents.read_clickevents).
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
+    # of sessions. Legacy TIMESTAMP(NANOS) tiers read through the
+    # nanosAsLong conf get_spark sets.
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "user_id", "event_id", "ts", "event_type"
     )
@@ -135,32 +134,17 @@ def build(spark: SparkSession, sf_dir: str, out_dir: str, factor: int) -> None:
 
 
 def timed(spark: SparkSession, name: str, fn, sf_dir: str, n: int = 2) -> float:
-    import __spark_entry__ as e
-
-    deps = e.CACHE_DEPS.get(name, ())
-    best = float("inf")
-    for _ in range(n):
-        spark.catalog.clearCache()
-        # same amortization semantics as bench.py: probe/consumer queries
-        # get their session-cached artifact re-warmed untimed
-        e.warm_caches(spark, sf_dir, deps)
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return best
+    """Best of ``n`` bench.py ``run_query`` walls (CACHE_DEPS re-warmed
+    untimed, clearCache between runs)."""
+    return min(run_query(spark, sf_dir, name, fn)[0] for _ in range(n))
 
 
 def main() -> None:
     names = sys.argv[1:] or DEFAULT_QUERIES
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "32g")
-        .appName("scale10x")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # the bench session and warm-up, so 1x walls compare with BASELINE rows
+    spark = get_spark(app_name="scale10x")
     build(spark, SF_DIR, OUT_DIR, FACTOR)
+    warm_up(spark, SF_DIR)
 
     import __spark_entry__ as e
 
