@@ -26,6 +26,10 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Replicated tiers (tools/scale10x.py) shift every integer key by
+# ID_STRIDE per replica, so pmod(id, ID_STRIDE) is the 1x id on any tier.
+ID_STRIDE = 10_000_000
+
 
 def read_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Read one test table. Parquet scan → full pushdown/pruning support."""

@@ -6,9 +6,11 @@ dict rode on that line and outgrew the tail as query count grew. These
 tests pin the fix: the contract line is O(1)-sized in query count and
 parses out of a simulated truncated tail no matter how many queries run.
 
-The last test pins ``bench.run_query``, the one timing loop bench.py and
-the tools/ harnesses share: CACHE_DEPS warm untimed, then the timed
-construction + noop write, then clearCache.
+The last tests pin the shared timing loops: ``bench.run_query``, the one
+bench.py and the tools/ harnesses share (CACHE_DEPS warm untimed, then
+the timed construction + noop write, then clearCache), and
+``bench_ingest``'s ``stage`` + ``replay``, which every ingest mode runs
+through (staged file ``i`` is epoch ``i``, and the checkpoint goes away).
 """
 
 from __future__ import annotations
@@ -109,3 +111,20 @@ def test_run_query_warms_deps_untimed_then_times_and_clears_cache(spark, monkeyp
     assert warm_s >= 3
     assert timed_s < 3
     assert cache.isEmpty()
+
+
+def test_bench_ingest_stage_replays_each_frame_as_its_epoch(spark, monkeypatch, tmp_path):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    import bench_ingest
+
+    frames = [spark.range(3 * i, 3 * i + 3, numPartitions=1) for i in range(3)]
+    src = bench_ingest.stage(frames)
+    got = []
+    wall, epoch_walls = bench_ingest.replay(
+        spark, src, lambda df, e: got.append((e, [r.id for r in df.orderBy("id").collect()]))
+    )
+    assert got == [(0, [0, 1, 2]), (1, [3, 4, 5]), (2, [6, 7, 8])]
+    assert len(epoch_walls) == 3 and wall >= sum(epoch_walls)
+    assert [p.name.split("-")[2] for p in tmp_path.iterdir()] == ["src"]

@@ -43,11 +43,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
+from flink_clickstream_processor_msk_spark.sources.tables import (
+    DEFAULT_SF_DIR,
+    ID_STRIDE,
+)
 
 SF_DIR = DEFAULT_SF_DIR
 SCRATCH = "/tmp/compaction_cadence_measure"
-ID_STRIDE = 10_000_000
 BATCH_SIZE = 500  # the bench_ingest cadence at sf0.1
 # probe depths in BATCHES (each batch = BATCH_SIZE docs appended as one
 # flat file) — log-spaced so a sub-noise linear term integrates visibly

@@ -38,7 +38,7 @@ def main() -> None:
         print("usage: measure_shuffle_bytes.py <query> [...]", file=sys.stderr)
         sys.exit(2)
     import __spark_entry__ as entry_mod
-    from bench import run_query
+    from bench import run_query, warm_up
     from flink_clickstream_processor_msk_spark import get_spark
     from flink_clickstream_processor_msk_spark.sources.tables import DEFAULT_SF_DIR
 
@@ -55,6 +55,7 @@ def main() -> None:
     ui = sc.uiWebUrl  # e.g. http://host:4040
     app_id = sc.applicationId
     base = f"{ui}/api/v1/applications/{app_id}"
+    warm_up(spark, sf_dir)  # else the first query's wall_s is a cold-JVM wall
 
     qs = entry_mod.queries()
     out = {}
