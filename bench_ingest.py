@@ -469,7 +469,9 @@ def corpus_semantic_mode() -> None:
     src = stage(contiguous(stream, "doc_id")[0])
     root = scratch("corpus-semantic")
     similarity.save_ivf_index(boot, f"{root}/ivf")
-    text.save_lm(docs.filter(F.col("doc_id") < 500), f"{root}/lm")
+    # LM on the bootstrap's lower half: [0, 500) at sf0.1, [0, 125) at sf0.01
+    lm_ids = halves(boot, "vec_id")[0].select(F.col("vec_id").alias("doc_id"))
+    text.save_lm(docs.join(lm_ids, "doc_id", "left_semi"), f"{root}/lm")
     # admit ~90%: the gate is live but does not starve the other legs
     cut = text.lm_bigram_score(
         stream, lm=text.load_lm(spark, f"{root}/lm")

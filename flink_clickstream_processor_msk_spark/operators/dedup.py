@@ -201,21 +201,19 @@ def shingle_hashes(
     return _parallelized(documents).select("doc_id", sh28("text").alias("shingles"))
 
 
-def _signatures_from_sets(
-    sets_: DataFrame, feats_col: str = "shingles", n_perms: int = N_PERMS
-) -> DataFrame:
+def _signatures_from_sets(sets_: DataFrame) -> DataFrame:
     """MinHash signature per doc over any distinct-hash feature array
     (word shingles, char n-grams, …): for each affine permutation, the min
     over the doc's feature hashes. No explode, no shuffle.
 
     Vectorized with numpy inside a pandas UDF: the equivalent
-    ``array_min(transform(...))`` per permutation runs n_perms interpreted
+    ``array_min(transform(...))`` per permutation runs N_PERMS interpreted
     passes over each feature array. Broadcasting ``(a·h + b) mod P`` over
-    (n_feats × n_perms) and taking the column min stays in C. Values are
+    (n_feats × N_PERMS) and taking the column min stays in C. Values are
     exact (int64: a < 2^30, h < 2^28 ⇒ a·h + b < 2^59)."""
     import numpy as np
 
-    coeffs = perm_coefficients(n_perms)
+    coeffs = perm_coefficients(N_PERMS)
     a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)
     b_vec = np.array([b for _, b in coeffs], dtype=np.int64)
 
@@ -231,18 +229,16 @@ def _signatures_from_sets(
 
         return feats.map(go)
 
-    return sets_.select("doc_id", feats_col, sig(feats_col).alias("signature"))
+    return sets_.select("doc_id", "shingles", sig("shingles").alias("signature"))
 
 
-def minhash_signatures(documents: DataFrame, n_perms: int = N_PERMS) -> DataFrame:
+def minhash_signatures(documents: DataFrame) -> DataFrame:
     """MinHash signatures over word-3-gram shingle sets."""
-    return _signatures_from_sets(shingle_hashes(documents), "shingles", n_perms)
+    return _signatures_from_sets(shingle_hashes(documents))
 
 
 def _banded(
     signatures: DataFrame,
-    n_bands: int = N_BANDS,
-    n_perms: int = N_PERMS,
     max_bucket_size: int | None = None,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -251,8 +247,14 @@ def _banded(
     band-key formula (and the bucket-cap semantics: keep the
     ``max_bucket_size`` LOWEST doc_ids per bucket) cannot desync.
     ``carry`` propagates extra columns (e.g. shingles) through the
-    explode, one copy per band row."""
-    rows = n_perms // n_bands
+    explode, one copy per band row.
+
+    The geometry is the module's ``N_PERMS``/``N_BANDS``, never a
+    parameter: the banded state records its bucket modulus but not its
+    band layout, so a save, append, probe or compact under a different
+    band count would route band keys differently and probes would
+    silently miss candidates."""
+    rows = N_PERMS // N_BANDS
     bands = F.array(
         *[
             F.struct(
@@ -261,7 +263,7 @@ def _banded(
                     "-", *[F.col("signature")[i * rows + j] for j in range(rows)]
                 ).alias("band_key"),
             )
-            for i in range(n_bands)
+            for i in range(N_BANDS)
         ]
     )
     banded = signatures.select(
@@ -303,7 +305,7 @@ def _bucket_pairs(banded: DataFrame, keys: list, member: Column) -> DataFrame:
 
     This REPLACES the banded self-join everywhere: the join shape moves
     the banded table TWICE through its exchange (or, at bench scale,
-    broadcasts a corpus×n_bands-row build side — impossible long before
+    broadcasts a corpus×N_BANDS-row build side — impossible long before
     100 TB under the 8 GB broadcast cap, after which AQE degrades it to a
     sort-merge join shuffling both sides) and recomputes the banding per
     join branch; this shape shuffles the banded bytes ONCE at any scale,
@@ -328,10 +330,7 @@ def _bucket_pairs(banded: DataFrame, keys: list, member: Column) -> DataFrame:
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame,
-    n_bands: int = N_BANDS,
-    n_perms: int = N_PERMS,
-    max_bucket_size: int | None = None,
+    signatures: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
     """Band the signatures and emit candidate pairs per band collision.
 
@@ -350,7 +349,7 @@ def lsh_candidate_pairs(
     (:func:`_bucket_pairs`), not a self-join — same pair set, half the
     banded-table shuffle. band_key is never NULL (concat_ws), so the
     groupBy and the join-equality null semantics coincide."""
-    banded = _banded(signatures, n_bands, n_perms, max_bucket_size)
+    banded = _banded(signatures, max_bucket_size)
     return (
         _bucket_pairs(banded, ["band_idx", "band_key"], F.col("doc_id"))
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
@@ -366,8 +365,6 @@ def jaccard(a: Column, b: Column) -> Column:
 def minhash_near_duplicates(
     documents: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
-    n_perms: int = N_PERMS,
-    n_bands: int = N_BANDS,
     max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
     scratch: list | None = None,
 ) -> DataFrame:
@@ -378,8 +375,8 @@ def minhash_near_duplicates(
     generation (the oracle-checked configuration). ``scratch``: receives
     the persisted signature table for caller release."""
     return _lsh_verified_pairs(
-        shingle_hashes(documents), "jaccard", threshold, n_perms, n_bands,
-        max_bucket_size, scratch=scratch,
+        shingle_hashes(documents), "jaccard", threshold, max_bucket_size,
+        scratch=scratch,
     )
 
 
@@ -437,17 +434,15 @@ def _state_bucket(band_key: Column, n_buckets) -> Column:
     )
 
 
-def _banded_frame(
-    state: DataFrame, n_bands: int, n_perms: int, n_buckets: int
-) -> DataFrame:
+def _banded_frame(state: DataFrame, n_buckets: int) -> DataFrame:
     """The banded state table as a frame: UNCAPPED (the cap is a
     probe-time policy — rank over corpus ∪ new; baking it into the saved
     table would freeze the corpus-only ranking); shingles ride along
-    (n_bands× duplication on disk) so a probe verifies candidates from
+    (N_BANDS× duplication on disk) so a probe verifies candidates from
     the pruned read alone — no corpus-wide doc_id→shingles join scan per
     batch."""
     return (
-        _banded(state, n_bands, n_perms, None, carry=("shingles",))
+        _banded(state, carry=("shingles",))
         .withColumn("pt", _state_bucket(F.col("band_key"), n_buckets))
         .withColumn("ptmod", F.lit(n_buckets))
     )
@@ -468,7 +463,7 @@ def _write_ptmod_marker(spark, gen_dir: str, n_buckets: int) -> None:
 
 
 def _stage_banded_generation(
-    state: DataFrame, path: str, n_bands: int, n_perms: int, n_buckets: int
+    state: DataFrame, path: str, n_buckets: int
 ) -> None:
     """Build the staged banded generation: clustered data write
     (``repartition(band_idx, pt)`` before ``partitionBy`` — the 5×
@@ -477,8 +472,7 @@ def _stage_banded_generation(
     ``banded_state_new``; the journal is empty by construction. The
     caller installs it with ONE :func:`lsm.swap_base` rename."""
     lsm.write_base_staged(
-        _banded_frame(state, n_bands, n_perms, n_buckets),
-        path, "banded_state", ("band_idx", "pt"),
+        _banded_frame(state, n_buckets), path, "banded_state", ("band_idx", "pt"),
     )
     _write_ptmod_marker(
         state.sparkSession, lsm.staged_dir(path, "banded_state"), n_buckets
@@ -509,8 +503,7 @@ def state_ptmod(spark, path: str) -> int:
 
 
 def save_dedup_state(
-    documents: DataFrame, path: str, n_perms: int = N_PERMS,
-    n_bands: int = N_BANDS, n_buckets: int = NUM_STATE_BUCKETS,
+    documents: DataFrame, path: str, n_buckets: int = NUM_STATE_BUCKETS
 ) -> None:
     """Write the corpus's minhash state: (doc_id, shingles, signature) —
     the amortized artifact :func:`incremental_minhash_pairs` checks new
@@ -523,7 +516,7 @@ def save_dedup_state(
     corpus ∪ new per ingest batch (the round-7 corpus-proportional term),
     and the carried shingles let it verify candidates without a
     corpus-wide doc_id→shingles join scan. Cost of that last property:
-    the banded table stores shingles ``n_bands``× (space-for-time; the
+    the banded table stores shingles ``N_BANDS``× (space-for-time; the
     signature state remains the compact 1× copy).
 
     r16 (generation layout, VERDICT r15 #1): each table is a GENERATION
@@ -541,13 +534,11 @@ def save_dedup_state(
     save re-run), which rebuilds the banded table from the NEW truth;
     truth-first ordering is what makes that healer converge to the
     intended save rather than reverting it."""
-    state = _materialized(
-        _signatures_from_sets(shingle_hashes(documents), "shingles", n_perms)
-    )
+    state = batch_dedup_state(documents)
     spark = state.sparkSession
     try:
         lsm.write_base_staged(state, path, "minhash_state", ())
-        _stage_banded_generation(state, path, n_bands, n_perms, n_buckets)
+        _stage_banded_generation(state, path, n_buckets)
         lsm.swap_base(spark, path, "minhash_state")
         lsm.swap_base(spark, path, "banded_state")
     finally:
@@ -555,21 +546,17 @@ def save_dedup_state(
 
 
 def append_dedup_state(
-    new_state: DataFrame, path: str, n_perms: int = N_PERMS,
-    n_bands: int = N_BANDS, n_buckets: int | None = None,
-    resolved_ptmod: int | None = None,
-    delta_files: int = 1,
+    new_state: DataFrame, path: str, resolved_ptmod: int | None = None
 ) -> None:
     """Fold a new batch's state rows (as returned by
     :func:`batch_dedup_state`) into the saved state, so the NEXT ingest
-    batch is checked against old + new. ``n_buckets`` defaults to
-    whatever the existing banded table was written with (the
-    ``banded_ptmod`` marker, :func:`state_ptmod`) —
-    appending with a different modulus would corrupt partition routing
-    and is refused, INCLUDING on an empty-corpus bootstrap (the marker
-    survives zero rows). ``resolved_ptmod`` lets a long-running ingest
-    sink thread an already-resolved modulus through, skipping the
-    per-batch marker read.
+    batch is checked against old + new. The bucket modulus is the one
+    the state was saved with (the ``banded_ptmod`` marker,
+    :func:`state_ptmod` — it survives an empty-corpus bootstrap), never
+    a caller's: a different modulus would route the same band_key to a
+    different partition and probes would silently miss corpus members.
+    ``resolved_ptmod`` lets a long-running ingest sink thread the
+    marker it already read, skipping the per-batch marker read.
 
     The banded rows go to the generation's FLAT ``delta``, not into the
     partitioned base: a dynamic-partition append commits one file per
@@ -579,17 +566,7 @@ def append_dedup_state(
     (the delta is recent-appends-sized and its (band_idx, pt) filter
     pushes down as an ordinary row-group filter), and
     :func:`compact_dedup_state` periodically rebuilds the partitioned
-    base from the signature table and clears the delta.
-
-    ``delta_files`` coalesces each append to that many parquet files
-    (default 1): without it the banded frame inherits the session's
-    shuffle partitioning and a 500-doc batch writes ~32 tiny files, so a
-    deep delta's probe cost is FILE-OPEN-bound, not row-bound — measured
-    (tools/measure_compaction_cadence.py) at a 160-batch/80 k-doc delta,
-    ~5000 tiny files put the probe at 8.7 s vs a 3.4 s empty-delta floor;
-    on an object store per-file opens dominate even harder. Coalescing a
-    micro-batch-sized append is free: the banding explode of a ≤ few-k-doc
-    batch is trivially single-partition work."""
+    base from the signature table and clears the delta."""
     spark = new_state.sparkSession
     # a live tombstone would silently suppress the re-added rows at
     # every read — refuse until compaction clears it (shared guard)
@@ -597,33 +574,22 @@ def append_dedup_state(
         new_state, path, "minhash_state", "doc_id",
         "compact_dedup_state", "documents",
     )
-    recorded = (
+    n_buckets = (
         resolved_ptmod if resolved_ptmod is not None else state_ptmod(spark, path)
     )
-    if n_buckets is None:
-        n_buckets = recorded
-    elif n_buckets != recorded:
-        # a mismatched modulus would route the same band_key to a
-        # DIFFERENT partition than the existing rows — probes would then
-        # silently miss corpus members. Refuse loudly, before any write.
-        raise ValueError(
-            f"banded state at {path} was written with n_buckets="
-            f"{recorded}; cannot append with n_buckets={n_buckets}"
-        )
     # lsm.data_path self-heals any interrupted swap BEFORE the append
     # (r15 review #2, now enforced inside the lsm resolvers): a
     # mode("append") parquet write into a missing live dir CREATES it,
     # after which self_heal_swap no-ops forever — the staged corpus would
     # be orphaned and the next compact (which rebuilds the banded base
     # from minhash_state, the source of truth) would silently shrink the
-    # corpus to the appended batches.
-    new_state.select("doc_id", "shingles", "signature").coalesce(
-        delta_files
-    ).write.mode("append").parquet(lsm.data_path(spark, path, "minhash_state"))
-    lsm.append_delta(
-        _banded_frame(new_state, n_bands, n_perms, n_buckets),
-        path, "banded_state", delta_files,
-    )
+    # corpus to the appended batches. ONE file per append (here and in
+    # lsm.append_delta): uncoalesced, ~5000 tiny delta files put the
+    # probe at 8.7 s — file-open-bound (tools/measure_compaction_cadence.py)
+    new_state.select("doc_id", "shingles", "signature").coalesce(1).write.mode(
+        "append"
+    ).parquet(lsm.data_path(spark, path, "minhash_state"))
+    lsm.append_delta(_banded_frame(new_state, n_buckets), path, "banded_state")
 
 
 def load_dedup_state(spark, path: str) -> DataFrame:
@@ -706,9 +672,6 @@ def load_banded_state(spark, path: str) -> DataFrame:
 # lock or a manifest layer (Delta/Iceberg) — out of scope here.
 
 
-_hadoop_fs = lsm.hadoop_fs
-
-
 def delete_from_dedup_state(spark, path: str, doc_ids) -> None:
     """Tombstone documents out of the dedup state: subsequent probes
     generate no pairs against them (the filter applies at READ time, so
@@ -742,10 +705,7 @@ def apply_tombstones(spark, path: str, df: DataFrame) -> DataFrame:
     return lsm.apply_tombstones(spark, path, "minhash_state", df, "doc_id")
 
 
-def compact_dedup_state(
-    spark, path: str, n_perms: int = N_PERMS, n_bands: int = N_BANDS,
-    n_buckets: int | None = None,
-) -> None:
+def compact_dedup_state(spark, path: str) -> None:
     """Fold the flat append delta back into the partitioned banded base —
     the periodic maintenance a high-frequency ingest schedules (the LSM
     compaction). The base is REBUILT from ``minhash_state`` (the
@@ -774,12 +734,11 @@ def compact_dedup_state(
     is what lets a later compact COMPLETE a crashed save instead of
     reverting it — the orders differ because compact derives from the
     old truth while save replaces it."""
-    if n_buckets is None:
-        n_buckets = state_ptmod(spark, path)
+    n_buckets = state_ptmod(spark, path)
     had_tombstones = load_deleted_ids(spark, path) is not None
     state = _materialized(load_dedup_state(spark, path))
     try:
-        _stage_banded_generation(state, path, n_bands, n_perms, n_buckets)
+        _stage_banded_generation(state, path, n_buckets)
         if had_tombstones:
             # physical removal from the source of truth: a fresh
             # generation (no tombstones) staged before either swap
@@ -794,21 +753,17 @@ def compact_dedup_state(
         state.unpersist()
 
 
-def batch_dedup_state(new_docs: DataFrame, n_perms: int = N_PERMS) -> DataFrame:
+def batch_dedup_state(new_docs: DataFrame) -> DataFrame:
     """Shingle + sign ONE ingest batch (persisted: it feeds both the band
     join and the verify join in :func:`incremental_minhash_pairs`, and is
     then appended to the corpus state)."""
-    return _materialized(
-        _signatures_from_sets(shingle_hashes(new_docs), "shingles", n_perms)
-    )
+    return _materialized(_signatures_from_sets(shingle_hashes(new_docs)))
 
 
 def incremental_minhash_pairs(
     new_state: DataFrame,
     corpus_state: DataFrame | None,
     threshold: float = JACCARD_THRESHOLD,
-    n_bands: int = N_BANDS,
-    n_perms: int = N_PERMS,
     max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
     corpus_banded: DataFrame | None = None,
     corpus_ptmod: int | None = None,
@@ -858,7 +813,7 @@ def incremental_minhash_pairs(
     new_ids = new_state.select("doc_id")
     if corpus_banded is not None:
         new_banded = _materialized(
-            _banded(new_state, n_bands, n_perms, None, carry=("shingles",))
+            _banded(new_state, carry=("shingles",))
         )
         if scratch is not None:
             scratch.append(new_banded)
@@ -870,7 +825,7 @@ def incremental_minhash_pairs(
             corpus_touched = None  # brand-new corpus: new×new pairs only
         else:
             n_buckets = row["ptmod"]
-            # driver-bounded: ≤ n_bands × n_buckets rows, whatever the
+            # driver-bounded: ≤ N_BANDS × n_buckets rows, whatever the
             # batch size — the collect that makes static partition
             # pruning possible on the saved banded table
             touched = (
@@ -935,7 +890,7 @@ def incremental_minhash_pairs(
     all_state = corpus_state.select(
         "doc_id", "shingles", "signature"
     ).unionByName(new_state.select("doc_id", "shingles", "signature"))
-    banded_all = _banded(all_state, n_bands, n_perms, max_bucket_size)
+    banded_all = _banded(all_state, max_bucket_size)
     banded_new = banded_all.join(new_ids, "doc_id", "left_semi")
     a, b = banded_new.alias("a"), banded_all.alias("b")
     pairs = (
@@ -978,8 +933,6 @@ def _lsh_verified_pairs(
     sets_: DataFrame,
     sim_col: str,
     threshold: float,
-    n_perms: int = N_PERMS,
-    n_bands: int = N_BANDS,
     max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
     scratch: list | None = None,
 ) -> DataFrame:
@@ -989,8 +942,8 @@ def _lsh_verified_pairs(
     join and the two feature-set joins — never an all-pairs compare.
     ``scratch``: receives the persisted signature table for caller
     release (:func:`_tracked`)."""
-    sigs = _tracked(_signatures_from_sets(sets_, "shingles", n_perms), scratch)
-    pairs = lsh_candidate_pairs(sigs, n_bands, n_perms, max_bucket_size)
+    sigs = _tracked(_signatures_from_sets(sets_), scratch)
+    pairs = lsh_candidate_pairs(sigs, max_bucket_size)
     feats = sigs.select("doc_id", "shingles")
     return (
         pairs.join(feats.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("shingles", "sh_a"), "doc_a")
@@ -1248,8 +1201,6 @@ def connected_components(
 def minhash_duplicate_families(
     documents: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
-    n_perms: int = N_PERMS,
-    n_bands: int = N_BANDS,
     max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
     pairs: DataFrame | None = None,
     small_graph_edge_rows: int = SMALL_GRAPH_EDGE_ROWS,
@@ -1288,9 +1239,7 @@ def minhash_duplicate_families(
     # then collect or the symmetric union), which would re-run the LSH
     # verify join per branch
     if pairs is None:
-        pairs = minhash_near_duplicates(
-            documents, threshold, n_perms, n_bands, max_bucket_size
-        )
+        pairs = minhash_near_duplicates(documents, threshold, max_bucket_size)
     pairs = ensure_persisted(pairs)
     n_pairs = pairs.count()
     if 2 * n_pairs <= small_graph_edge_rows:
@@ -1332,8 +1281,6 @@ def minhash_duplicate_families(
 def dedup_graph_stats(
     documents: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
-    n_perms: int = N_PERMS,
-    n_bands: int = N_BANDS,
     max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
@@ -1352,9 +1299,7 @@ def dedup_graph_stats(
     groupBy over the symmetric edge list, families reuse the
     size-adaptive component resolver — nothing here re-touches text."""
     if pairs is None:
-        pairs = minhash_near_duplicates(
-            documents, threshold, n_perms, n_bands, max_bucket_size
-        )
+        pairs = minhash_near_duplicates(documents, threshold, max_bucket_size)
     pairs = ensure_persisted(pairs)
     fam = minhash_duplicate_families(documents, pairs=pairs)
     degree = (

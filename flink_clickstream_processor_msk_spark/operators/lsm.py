@@ -228,13 +228,12 @@ def install_base(
 # --- journal: appends -----------------------------------------------------------
 
 
-def append_delta(rows: DataFrame, path: str, sub: str, n_files: int = 1) -> None:
-    """Flat delta append, coalesced to ``n_files`` (default ONE) parquet
-    files — the append half of the LSM contract (module docstring).
-    :func:`delta_path` self-heals an interrupted swap first: the append
-    write would otherwise CREATE the live dir and orphan a staged
-    generation."""
-    rows.coalesce(n_files).write.mode("append").parquet(
+def append_delta(rows: DataFrame, path: str, sub: str) -> None:
+    """Flat delta append, coalesced to ONE parquet file — the append
+    half of the LSM contract (module docstring). :func:`delta_path`
+    self-heals an interrupted swap first: the append write would
+    otherwise CREATE the live dir and orphan a staged generation."""
+    rows.coalesce(1).write.mode("append").parquet(
         delta_path(rows.sparkSession, path, sub)
     )
 

@@ -6,7 +6,7 @@ near-duplicates against the corpus's written minhash state (pairs touching
 the batch — new×corpus and new×new), delivered to a pairs consumer, and
 folded into the state so the NEXT batch is checked against old+new. The
 corpus text is never re-read; per-batch cost is O(batch text) + a
-partition-pruned probe of the pre-banded state (only the ≤ n_bands ×
+partition-pruned probe of the pre-banded state (only the ≤ N_BANDS ×
 n_buckets disk partitions the batch's own bands route to are read, and
 exact-Jaccard verification runs inline on the shingles CARRIED in the
 probed rows — no corpus-wide verify scan; PLANS.md "Incremental ingest
@@ -34,19 +34,18 @@ from flink_clickstream_processor_msk_spark.functions.parallel import (
     one_slice_rows,
 )
 from flink_clickstream_processor_msk_spark.operators.dedup import (
-    JACCARD_THRESHOLD,
     MAX_BUCKET_SIZE_DEFAULT,
     NUM_STATE_BUCKETS,
     append_dedup_state,
     apply_tombstones,
     batch_dedup_state,
+    compact_dedup_state,
     incremental_minhash_pairs,
     load_banded_base,
     load_banded_delta,
     save_dedup_state,
     state_ptmod,
 )
-from flink_clickstream_processor_msk_spark.operators.text import SHINGLE_K
 
 
 def _compact_index_or_warn(spark, index_path: str, kind: str, epoch_id: int) -> None:
@@ -138,7 +137,7 @@ class _StateHandles:
 # Measured constants behind recommended_compact_every (sf0.1 base corpus,
 # 500-doc batches, delta swept log-spaced to 160 batches = 80 k docs —
 # tools/measure_compaction_cadence.py; PLANS.md round-11 row):
-#   - with delta_files=1 appends (the append_dedup_state default), the
+#   - with one-file appends (append_dedup_state coalesces each), the
 #     probe-vs-delta-rows slope is BELOW the host-noise band through a
 #     16×-base delta (fit −0.007 s/kdoc) — the row term is unmeasurable,
 #   - the term that DOES grow is per-delta-FILE open cost: the pre-fix
@@ -169,7 +168,7 @@ def recommended_compact_every(
         E* = sqrt(2·C / (f·files_per_epoch))
 
     Batch SIZE drops out: the measured row term is below noise through a
-    16×-base delta once appends are coalesced (``delta_files=1``), so the
+    16×-base delta once each append is coalesced to one file, so the
     file count — not the doc count — is the delta's real probe cost. With
     the local measurements this returns ~108 epochs; on an object store
     pass the store's per-object read overhead (e.g. 0.03 s per GET) to
@@ -188,10 +187,81 @@ def recommended_compact_every(
     )
 
 
+def _scratch_epoch(
+    run: Callable[[DataFrame, int, list], None]
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch writer around ``run(batch, epoch_id, scratch)``:
+    every frame the epoch persists into ``scratch`` is unpersisted before
+    the epoch returns, so a long-running query holds a constant number
+    of cached tables."""
+
+    def write(batch: DataFrame, epoch_id: int) -> None:
+        scratch: list[DataFrame] = []
+        try:
+            run(batch, epoch_id, scratch)
+        finally:
+            for df in scratch:
+                df.unpersist()
+
+    return write
+
+
+def _dsir_scorer(dsir_path: str) -> Callable[[DataFrame], DataFrame]:
+    """The DSIR scoring leg of :func:`dsir_ingest_sink` and of
+    :func:`corpus_ingest_sink`'s selection gate: the ratio table
+    (n_buckets rows) and the meta row resolve ONCE per sink (the
+    ``_StateHandles`` discipline) and the table persists — it is every
+    epoch's broadcast join build side."""
+    from pyspark.storagelevel import StorageLevel
+
+    from flink_clickstream_processor_msk_spark.operators import pipeline
+
+    handles: dict = {}
+
+    def score(batch_docs: DataFrame) -> DataFrame:
+        if not handles:
+            ratio_q, meta = pipeline.load_dsir(batch_docs.sparkSession, dsir_path)
+            handles["ratios"] = ratio_q.persist(StorageLevel.MEMORY_AND_DISK)
+            handles["cutoff"] = meta["cutoff"]
+            handles["n_buckets"] = meta["n_buckets"]
+        return pipeline.dsir_score_saved(
+            batch_docs,
+            handles["ratios"],
+            handles["cutoff"],
+            n_buckets=handles["n_buckets"],
+        )
+
+    return score
+
+
+def _lm_scorer(lm_path: str) -> Callable[[DataFrame], DataFrame]:
+    """The LM scoring leg of :func:`lm_quality_ingest_sink` and of
+    :func:`corpus_ingest_sink`'s quality gate: the LM tables resolve
+    ONCE per sink (re-reading three parquet dirs per epoch is pure fixed
+    cost) and c2/c1 persist — they are every epoch's join build sides,
+    so an unpersisted plan would re-scan the LM parquet per batch."""
+    from pyspark.storagelevel import StorageLevel
+
+    from flink_clickstream_processor_msk_spark.operators import text
+
+    handles: dict = {}
+
+    def score(batch_docs: DataFrame) -> DataFrame:
+        if not handles:
+            c2, c1, vocab = text.load_lm(batch_docs.sparkSession, lm_path)
+            handles["lm"] = (
+                c2.persist(StorageLevel.MEMORY_AND_DISK),
+                c1.persist(StorageLevel.MEMORY_AND_DISK),
+                vocab,
+            )
+        return text.lm_bigram_score(batch_docs, lm=handles["lm"])
+
+    return score
+
+
 def dedup_ingest_sink(
     state_path: str,
     on_pairs: Callable[[DataFrame, int], None],
-    threshold: float = JACCARD_THRESHOLD,
     max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
     compact_every: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
@@ -217,48 +287,59 @@ def dedup_ingest_sink(
     resolved once (:class:`_StateHandles`), only the small flat delta is
     re-listed per batch, and every persisted scratch table (the batch's
     signature AND banded frames) is unpersisted before the epoch returns
-    — a long-running query holds a constant number of cached tables."""
+    — a long-running query holds a constant number of cached tables.
+
+    ``write.begin`` is the leg :func:`corpus_ingest_sink` composes, in
+    :func:`semantic_dedup_ingest_sink`'s begin/fold shape."""
     if compact_every is None:
         compact_every = recommended_compact_every()
     handles = _StateHandles(state_path)
 
-    def write(batch_docs: DataFrame, epoch_id: int) -> None:
+    def begin(
+        batch_docs: DataFrame, epoch_id: int, scratch: list
+    ) -> tuple[DataFrame, Callable[..., None]]:
+        """Shingle + sign the batch, probe the state and DELIVER its pairs
+        (NO state mutation). Returns the batch's (doc_id, shingles,
+        signature) state — persisted, in ``scratch`` for the caller's
+        finally — and a ``fold(then=None)`` closure that appends it to
+        the state, runs ``then`` (a composing sink's other folds, so
+        every fold follows this leg's refusals), then the compaction
+        cadence."""
         spark = batch_docs.sparkSession
         new_state = batch_dedup_state(batch_docs)
-        scratch: list[DataFrame] = [new_state]
-        try:
-            on_pairs(
-                incremental_minhash_pairs(
-                    new_state,
-                    None,
-                    threshold=threshold,
-                    max_bucket_size=max_bucket_size,
-                    # probe the pre-banded state with partition pruning
-                    # instead of re-banding corpus ∪ new per micro-batch
-                    # (the corpus-proportional term flagged in round 7)
-                    corpus_banded=handles.banded(spark),
-                    corpus_ptmod=handles.ptmod(spark),
-                    scratch=scratch,
-                ),
-                epoch_id,
-            )
+        scratch.append(new_state)
+        on_pairs(
+            incremental_minhash_pairs(
+                new_state,
+                None,
+                max_bucket_size=max_bucket_size,
+                # probe the pre-banded state with partition pruning
+                # instead of re-banding corpus ∪ new per micro-batch
+                # (the corpus-proportional term flagged in round 7)
+                corpus_banded=handles.banded(spark),
+                corpus_ptmod=handles.ptmod(spark),
+                scratch=scratch,
+            ),
+            epoch_id,
+        )
+
+        def fold(then: Callable[[], None] | None = None) -> None:
             # fold AFTER pair delivery: a crash in between redelivers the
             # batch (at-least-once) rather than silently growing state
             # without its pairs ever having been emitted
             append_dedup_state(
                 new_state, state_path, resolved_ptmod=handles.ptmod(spark)
             )
+            if then is not None:
+                then()
             if compact_every and (epoch_id + 1) % compact_every == 0:
-                from flink_clickstream_processor_msk_spark.operators.dedup import (
-                    compact_dedup_state,
-                )
-
                 compact_dedup_state(spark, state_path)
                 handles.invalidate()
-        finally:
-            for df in scratch:
-                df.unpersist()
 
+        return new_state, fold
+
+    write = _scratch_epoch(lambda batch, e, scratch: begin(batch, e, scratch)[1]())
+    write.begin = begin
     return write
 
 
@@ -267,9 +348,7 @@ def corpus_ingest_sink(
     grams_path: str,
     on_pairs: Callable[[DataFrame, int], None],
     on_flags: Callable[[DataFrame, int], None],
-    threshold: float = JACCARD_THRESHOLD,
     max_bucket_size: int | None = MAX_BUCKET_SIZE_DEFAULT,
-    k: int = SHINGLE_K,
     compact_every: int | None = None,
     lm_path: str | None = None,
     min_avg_prob: float | None = None,
@@ -277,15 +356,14 @@ def corpus_ingest_sink(
     dsir_path: str | None = None,
     semantic_index_path: str | None = None,
     on_semantic_flags: Callable[[DataFrame, int], None] | None = None,
-    embedding_col: str = "embedding",
     semantic_threshold: float | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """The full training-data ingest leg as ONE foreachBatch writer:
     each micro-batch of documents is near-dup-checked against the
-    written dedup state (as :func:`dedup_ingest_sink`) AND
+    written dedup state (:func:`dedup_ingest_sink`'s leg) AND
     decontamination-flagged against a saved benchmark gram table
-    (pipeline.save_test_grams) — the single-pass fan-out idea applied to
-    ingest. When ``k`` equals the dedup shingle width (the default), the
+    (``pipeline.save_test_grams`` at the dedup shingle width
+    ``SHINGLE_K``) — the single-pass fan-out idea applied to ingest. The
     decontamination leg reuses the batch's ALREADY-COMPUTED shingle
     table instead of re-running the Arrow md5 text kernel — the
     per-document text pass, the pipeline's dominant cost, is paid once
@@ -304,8 +382,7 @@ def corpus_ingest_sink(
     bigram to score) are REJECTED too: a gate that admits unscoreable
     text is no gate. ``on_rejected(df, epoch)`` receives the rejects as
     (doc_id, avg_prob) with NULL avg_prob for the unscoreable class —
-    route to quarantine/sampling there. The LM tables resolve once per
-    sink and persist (the handles discipline).
+    route to quarantine/sampling there.
 
     ``dsir_path`` turns on the SELECTION GATE (``pipeline.save_dsir``;
     :func:`dsir_ingest_sink`'s leg), applied FIRST — select, then
@@ -316,18 +393,17 @@ def corpus_ingest_sink(
     LM-scored.
 
     ``semantic_index_path`` + ``on_semantic_flags`` compose the
-    EMBEDDING leg (round 12): a multimodal ingest carries
-    ``embedding_col`` alongside the text, and each ADMITTED batch (after
-    the cheap text gates — gates before expensive state, the pipeline
-    order rule) is also SemDeDup-checked against the written IVF index
-    at that path, exactly as :func:`semantic_dedup_ingest_sink` does
-    standalone (``(vec_id=doc_id, cell, is_kept)`` flags delivered, all
-    rows folded into the index) — ONE pass over (documents, embeddings),
-    two states maintained. Both-or-neither validation as for the quality
-    gate; gated-out documents never reach the index."""
+    EMBEDDING leg (round 12): a multimodal ingest carries an
+    ``embedding`` column alongside the text, and each ADMITTED batch
+    (after the cheap text gates — gates before expensive state, the
+    pipeline order rule) is also SemDeDup-checked against the written
+    IVF index at that path by :func:`semantic_dedup_ingest_sink`'s leg
+    (``(vec_id=doc_id, cell, is_kept)`` flags delivered, all rows folded
+    into the index) — ONE pass over (documents, embeddings), two states
+    maintained. Both-or-neither validation as for the quality gate;
+    gated-out documents never reach the index."""
     from flink_clickstream_processor_msk_spark.operators.pipeline import (
         _flag_contaminated,
-        decontaminate_incremental,
         load_test_grams,
     )
 
@@ -341,192 +417,113 @@ def corpus_ingest_sink(
             "pass both to enable it or neither to ingest unfiltered"
         )
     if (semantic_index_path is None) != (on_semantic_flags is None) or (
-        semantic_index_path is None
-        and (semantic_threshold is not None or embedding_col != "embedding")
+        semantic_index_path is None and semantic_threshold is not None
     ):
-        # half-configured embedding leg — including a threshold or a
-        # column override with no index/callback pair, which would
-        # otherwise run NO semantic check at all (the r12 review catch,
-        # same class as the lm_path/min_avg_prob rule)
+        # half-configured embedding leg — including a threshold with no
+        # index/callback pair, which would otherwise run NO semantic
+        # check at all (the r12 review catch, same class as the
+        # lm_path/min_avg_prob rule)
         raise ValueError(
             "the embedding leg needs BOTH semantic_index_path and "
             f"on_semantic_flags (got semantic_index_path="
             f"{semantic_index_path!r}, on_semantic_flags="
             f"{on_semantic_flags!r}, semantic_threshold="
-            f"{semantic_threshold!r}, embedding_col={embedding_col!r}); "
-            "pass both to enable it or neither"
+            f"{semantic_threshold!r}); pass both to enable it or neither"
         )
+    # one maintenance cadence for both states the sink owns
+    minhash = dedup_ingest_sink(
+        state_path, on_pairs,
+        max_bucket_size=max_bucket_size, compact_every=compact_every,
+    )
     sem_inner = (
         semantic_dedup_ingest_sink(
             semantic_index_path, on_semantic_flags,
-            threshold=semantic_threshold,
-            # one maintenance cadence for both states the sink owns
-            compact_every=compact_every,
+            threshold=semantic_threshold, compact_every=compact_every,
         )
         if semantic_index_path is not None
         else None
     )
-    if compact_every is None:
-        compact_every = recommended_compact_every()
-    handles = _StateHandles(state_path)
-    lm_handle: dict = {}
-    dsir_handle: dict = {}
+    select = _dsir_scorer(dsir_path) if dsir_path is not None else None
+    score = _lm_scorer(lm_path) if lm_path is not None else None
+
+    def _unscored(ids: DataFrame) -> DataFrame:
+        return ids.select("doc_id", F.lit(None).cast("double").alias("avg_prob"))
 
     def _selection_gate(batch_docs: DataFrame, epoch_id: int) -> DataFrame:
-        from pyspark.storagelevel import StorageLevel
-
-        from flink_clickstream_processor_msk_spark.operators import pipeline
-
-        spark = batch_docs.sparkSession
-        if "ratios" not in dsir_handle:
-            ratio_q, meta = pipeline.load_dsir(spark, dsir_path)
-            dsir_handle["ratios"] = ratio_q.persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            dsir_handle["cutoff"] = meta["cutoff"]
-            dsir_handle["n_buckets"] = meta["n_buckets"]
-        scored = pipeline.dsir_score_saved(
-            batch_docs,
-            dsir_handle["ratios"],
-            dsir_handle["cutoff"],
-            n_buckets=dsir_handle["n_buckets"],
-        )
-        admitted = batch_docs.join(
-            scored.filter(F.col("selected")).select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
+        selected = select(batch_docs).filter(F.col("selected")).select("doc_id")
         if on_rejected is not None:
-            rejects = batch_docs.select("doc_id").join(
-                scored.filter(F.col("selected")).select("doc_id"),
-                "doc_id",
-                "left_anti",
-            )
             on_rejected(
-                rejects.select(
-                    "doc_id", F.lit(None).cast("double").alias("avg_prob")
+                _unscored(
+                    batch_docs.select("doc_id").join(
+                        selected, "doc_id", "left_anti"
+                    )
                 ),
                 epoch_id,
             )
-        return admitted
+        return batch_docs.join(selected, "doc_id", "left_semi")
 
     def _quality_gate(batch_docs: DataFrame, epoch_id: int) -> DataFrame:
-        from pyspark.storagelevel import StorageLevel
-
-        from flink_clickstream_processor_msk_spark.operators import text
-
-        spark = batch_docs.sparkSession
-        if "lm" not in lm_handle:
-            c2, c1, vocab = text.load_lm(spark, lm_path)
-            lm_handle["lm"] = (
-                c2.persist(StorageLevel.MEMORY_AND_DISK),
-                c1.persist(StorageLevel.MEMORY_AND_DISK),
-                vocab,
-            )
-        scores = text.lm_bigram_score(batch_docs, lm=lm_handle["lm"])
-        passing = scores.filter(F.col("avg_prob") >= min_avg_prob)
-        admitted = batch_docs.join(
-            passing.select("doc_id"), "doc_id", "left_semi"
-        )
+        scores = score(batch_docs)
         if on_rejected is not None:
             scored_rejects = scores.filter(
                 F.col("avg_prob") < min_avg_prob
             ).select("doc_id", "avg_prob")
-            unscoreable = (
-                batch_docs.select("doc_id")
-                .join(scores.select("doc_id"), "doc_id", "left_anti")
-                .select(
-                    "doc_id", F.lit(None).cast("double").alias("avg_prob")
-                )
+            unscoreable = batch_docs.select("doc_id").join(
+                scores.select("doc_id"), "doc_id", "left_anti"
             )
-            on_rejected(scored_rejects.unionByName(unscoreable), epoch_id)
-        return admitted
+            on_rejected(
+                scored_rejects.unionByName(_unscored(unscoreable)), epoch_id
+            )
+        passing = scores.filter(F.col("avg_prob") >= min_avg_prob)
+        return batch_docs.join(passing.select("doc_id"), "doc_id", "left_semi")
 
-    def write(batch_docs: DataFrame, epoch_id: int) -> None:
+    def run(batch_docs: DataFrame, epoch_id: int, scratch: list) -> None:
         from pyspark.storagelevel import StorageLevel
 
         spark = batch_docs.sparkSession
-        if dsir_path is not None:
+        if select is not None:
             batch_docs = _selection_gate(batch_docs, epoch_id)
-        if lm_path is not None and min_avg_prob is not None:
+        if score is not None:
             batch_docs = _quality_gate(batch_docs, epoch_id)
-        scratch: list[DataFrame] = []
-        try:
-            if (
-                sem_inner is not None
-                or dsir_path is not None
-                or lm_path is not None
-            ):
-                # the admitted frame fans out to the semantic select, the
-                # minhash state build, and the decontamination flags —
-                # without a persist each consumer re-executes the gate
-                # joins (ADVICE r12: 2-3 recomputations per epoch)
-                batch_docs = batch_docs.persist(StorageLevel.MEMORY_AND_DISK)
-                scratch.append(batch_docs)
-            sem_fold = None
-            if sem_inner is not None:
-                sem_vecs = batch_docs.select(
-                    F.col("doc_id").alias("vec_id"),
-                    F.col(embedding_col).alias("embedding"),
-                )
-                # flags deliver NOW; the index fold is deferred to after
-                # append_dedup_state succeeds (ADVICE r12 medium: a
-                # minhash-leg refusal must not strand a retrying epoch
-                # with the IVF index already mutated)
-                sem_fold = sem_inner.begin(sem_vecs, epoch_id, scratch)
-            new_state = batch_dedup_state(batch_docs)
-            scratch.append(new_state)
-            on_pairs(
-                incremental_minhash_pairs(
-                    new_state,
-                    None,
-                    threshold=threshold,
-                    max_bucket_size=max_bucket_size,
-                    corpus_banded=handles.banded(spark),
-                    corpus_ptmod=handles.ptmod(spark),
-                    scratch=scratch,
-                ),
-                epoch_id,
+        if sem_inner is not None or select is not None or score is not None:
+            # the admitted frame fans out to the semantic select, the
+            # minhash state build, and the decontamination flags —
+            # without a persist each consumer re-executes the gate
+            # joins (ADVICE r12: 2-3 recomputations per epoch)
+            batch_docs = batch_docs.persist(StorageLevel.MEMORY_AND_DISK)
+            scratch.append(batch_docs)
+        sem_fold = None
+        if sem_inner is not None:
+            sem_vecs = batch_docs.select(
+                F.col("doc_id").alias("vec_id"), "embedding"
             )
-            test_grams = load_test_grams(spark, grams_path, k)
-            if k == SHINGLE_K:
-                # the dedup state's shingles ARE shingle_hashes(k) —
-                # explode them rather than re-shingling the text
-                flags = _flag_contaminated(
-                    batch_docs.select("doc_id"),
-                    new_state.select(
-                        "doc_id", F.explode("shingles").alias("gram")
-                    ),
-                    test_grams.select("gram"),
-                )
-            else:
-                flags = decontaminate_incremental(batch_docs, test_grams, k=k)
-            on_flags(flags, epoch_id)
-            if sem_fold is not None:
-                # pre-validate the index's tombstones too, so BOTH
-                # deterministic refusals fire before EITHER state mutates
-                from flink_clickstream_processor_msk_spark.operators import (
-                    similarity,
-                )
-
-                similarity._refuse_tombstoned(sem_vecs, semantic_index_path)
-            append_dedup_state(
-                new_state, state_path, resolved_ptmod=handles.ptmod(spark)
+            # flags deliver NOW; the index fold runs inside the minhash
+            # fold, after append_dedup_state succeeds (ADVICE r12
+            # medium: a minhash-leg refusal must not strand a retrying
+            # epoch with the IVF index already mutated)
+            sem_fold = sem_inner.begin(sem_vecs, epoch_id, scratch)
+        new_state, fold = minhash.begin(batch_docs, epoch_id, scratch)
+        # the dedup state's shingles ARE shingle_hashes(SHINGLE_K) —
+        # explode them rather than re-shingling the text
+        on_flags(
+            _flag_contaminated(
+                batch_docs.select("doc_id"),
+                new_state.select("doc_id", F.explode("shingles").alias("gram")),
+                load_test_grams(spark, grams_path).select("gram"),
+            ),
+            epoch_id,
+        )
+        if sem_fold is not None:
+            # pre-validate the index's tombstones too, so BOTH
+            # deterministic refusals fire before EITHER state mutates
+            from flink_clickstream_processor_msk_spark.operators import (
+                similarity,
             )
-            if sem_fold is not None:
-                sem_fold()
-            if compact_every and (epoch_id + 1) % compact_every == 0:
-                from flink_clickstream_processor_msk_spark.operators.dedup import (
-                    compact_dedup_state,
-                )
 
-                compact_dedup_state(spark, state_path)
-                handles.invalidate()
-        finally:
-            for df in scratch:
-                df.unpersist()
+            similarity._refuse_tombstoned(sem_vecs, semantic_index_path)
+        fold(then=sem_fold)
 
-    return write
+    return _scratch_epoch(run)
 
 
 def semantic_dedup_ingest_sink(
@@ -653,14 +650,7 @@ def semantic_dedup_ingest_sink(
 
         return fold
 
-    def write(batch_vecs: DataFrame, epoch_id: int) -> None:
-        scratch: list = []
-        try:
-            begin(batch_vecs, epoch_id, scratch)()
-        finally:
-            for df in scratch:
-                df.unpersist()
-
+    write = _scratch_epoch(lambda batch, e, scratch: begin(batch, e, scratch)())
     write.begin = begin
     return write
 
@@ -680,12 +670,12 @@ def dsir_ingest_sink(
     is exactly why ``save_dsir`` translates the rank cut into a cutoff
     score at train time.
 
-    The ratio table (n_buckets rows) and the meta row resolve ONCE per
-    sink (the ``_StateHandles`` discipline) and persist — the table is
-    every epoch's broadcast join build side. Batch-vs-replay equality is
-    pinned in tests/test_incremental.py: scores over a replay equal the
-    batch operator's, and the selected set equals ``dsir_select``'s rank
-    cut on the training corpus when no scores tie the boundary.
+    The ratio table and the meta row resolve ONCE per sink
+    (:func:`_dsir_scorer`, shared with :func:`corpus_ingest_sink`'s
+    selection gate). Batch-vs-replay equality is pinned in
+    tests/test_incremental.py: scores over a replay equal the batch
+    operator's, and the selected set equals ``dsir_select``'s rank cut
+    on the training corpus when no scores tie the boundary.
 
     This saved-cutoff gate is the streaming twin of
     ``dsir_select(approx=True)`` (the batch 100 TB path): both replace
@@ -693,28 +683,10 @@ def dsir_ingest_sink(
     threshold is frozen at train time, there it comes from a
     percentile_approx sketch per run — so neither ever ranks a corpus
     through a single partition."""
-    from pyspark.storagelevel import StorageLevel
-
-    from flink_clickstream_processor_msk_spark.operators import pipeline
-
-    handles: dict = {}
+    score = _dsir_scorer(dsir_path)
 
     def write(batch_docs: DataFrame, epoch_id: int) -> None:
-        spark = batch_docs.sparkSession
-        if "ratios" not in handles:
-            ratio_q, meta = pipeline.load_dsir(spark, dsir_path)
-            handles["ratios"] = ratio_q.persist(StorageLevel.MEMORY_AND_DISK)
-            handles["cutoff"] = meta["cutoff"]
-            handles["n_buckets"] = meta["n_buckets"]
-        on_scores(
-            pipeline.dsir_score_saved(
-                batch_docs,
-                handles["ratios"],
-                handles["cutoff"],
-                n_buckets=handles["n_buckets"],
-            ),
-            epoch_id,
-        )
+        on_scores(score(batch_docs), epoch_id)
 
     return write
 
@@ -756,7 +728,6 @@ def semantic_decon_ingest_sink(
 def lm_quality_ingest_sink(
     lm_path: str,
     on_scores: Callable[[DataFrame, int], None],
-    by_lang: bool = False,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch writer scoring each micro-batch of documents against
     a WRITTEN reference bigram LM (``text.save_lm``) — the streaming
@@ -766,35 +737,14 @@ def lm_quality_ingest_sink(
     tag there). Completes the incremental-ingest quartet (near-dup
     state, decontamination grams, ANN index, quality LM).
 
-    The LM tables are resolved ONCE per sink (the ``_StateHandles``
-    discipline — re-reading three parquet dirs per epoch is pure fixed
-    cost) and persisted: c2/c1 are every epoch's join build sides, so an
-    unpersisted plan would re-scan the LM parquet per batch. Scores are
+    The LM tables resolve ONCE per sink and persist (:func:`_lm_scorer`,
+    shared with :func:`corpus_ingest_sink`'s quality gate). Scores are
     identical to the batch operator against the same LM (pinned in
-    tests/test_streaming.py).
-
-    ``by_lang=True`` scores each document against ITS LANGUAGE's model
-    (CCNet's actual per-language design, ``text.lm_bigram_score_by_lang``)
-    — ``lm_path`` must then hold a ``save_lm(..., by_lang=True)``
-    artifact; documents whose language has no model rows are unscored
-    (route them from the frame's absence downstream)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from flink_clickstream_processor_msk_spark.operators import text
-
-    handles: dict = {}
-    score = text.lm_bigram_score_by_lang if by_lang else text.lm_bigram_score
+    tests/test_streaming.py)."""
+    score = _lm_scorer(lm_path)
 
     def write(batch_docs: DataFrame, epoch_id: int) -> None:
-        spark = batch_docs.sparkSession
-        if "lm" not in handles:
-            c2, c1, vocab = text.load_lm(spark, lm_path, by_lang=by_lang)
-            handles["lm"] = (
-                c2.persist(StorageLevel.MEMORY_AND_DISK),
-                c1.persist(StorageLevel.MEMORY_AND_DISK),
-                vocab,
-            )
-        on_scores(score(batch_docs, lm=handles["lm"]), epoch_id)
+        on_scores(score(batch_docs), epoch_id)
 
     return write
 
@@ -929,9 +879,7 @@ def tokenizer_ingest_sink(
 def index_ingest_sink(
     index_path: str,
     kind: str = "ivf",
-    on_occupancy: Callable[[DataFrame, int], None] | None = None,
     retrain_hook: Callable[[SparkSession, int], None] | None = None,
-    ood_retrain_fraction: float | None = None,
     growth_retrain_fraction: float | None = None,
     compact_every: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
@@ -953,22 +901,17 @@ def index_ingest_sink(
     one-file-per-epoch delta shape; 0 disables), so a long-running sink
     cannot silently accumulate file-open-bound deltas.
 
-    The measured PLANS.md drift policy is now MECHANISM, not advice:
+    The measured PLANS.md drift policy is now MECHANISM, not advice
+    (IVF recall is drift-robust, so its occupancy skew stays a driver
+    query, ``similarity.index_occupancy_stats``):
 
-    - ``kind="ivf"`` + ``on_occupancy``: after each append the per-cell
-      ``similarity.index_occupancy_stats`` frame (computed over the
-      written cells with the centroid count, so empty cells show) is
-      delivered to the callback — IVF recall is drift-robust, so
-      occupancy skew (one cell absorbing the new region; alarm at
-      ``similarity.OCCUPANCY_SKEW_ALARM``) is the stat worth paging on.
     - ``kind="pq"`` / ``kind="ivfpq"`` + ``retrain_hook``: each batch's
       share of vectors whose quantization error exceeds the saved base
       quantile (``path/ood_ref``, written by ``save_pq_index`` /
       ``save_ivfpq_index`` — the composed layout's PQ half drifts
       exactly like the standalone one, r14) accumulates into
       a cumulative OOD fraction of the corpus; when it passes
-      ``ood_retrain_fraction`` (default
-      ``similarity.PQ_OOD_RETRAIN_FRACTION``, the measured ~10%
+      ``similarity.PQ_OOD_RETRAIN_FRACTION`` (the measured ~10%
       threshold) the hook fires ONCE — it should re-save the index with
       re-seeded AND re-refined codebooks
       (``pq_refine_codebooks(corpus, codebooks=pq_codebooks(corpus,
@@ -1025,8 +968,6 @@ def index_ingest_sink(
             f"kind={kind!r}) — the hook would never fire; drop it or "
             "use a PQ-coded index for the drift-monitored tier"
         )
-    if ood_retrain_fraction is None:
-        ood_retrain_fraction = similarity.PQ_OOD_RETRAIN_FRACTION
     if compact_every is None:
         compact_every = recommended_compact_every()
     # per-sink monitor state: the saved reference + codebooks + the
@@ -1078,7 +1019,7 @@ def index_ingest_sink(
             growth_retrain_fraction is not None
             and monitor["appended"] / max(base_n, 1) > growth_retrain_fraction
         )
-        if frac > ood_retrain_fraction or grown:
+        if frac > similarity.PQ_OOD_RETRAIN_FRACTION or grown:
             retrain_hook(spark, epoch_id)
             # restart against the re-trained reference (new codebooks,
             # new base quantile — so base_n now includes everything the
@@ -1101,12 +1042,6 @@ def index_ingest_sink(
         )
         if compact_every and (epoch_id + 1) % compact_every == 0:
             _compact_index_or_warn(spark, index_path, kind, epoch_id)
-        if kind == "ivf" and on_occupancy is not None:
-            cents, cells = similarity.load_ivf_index(spark, index_path)
-            on_occupancy(
-                similarity.index_occupancy_stats(cells, n_cells=len(cents)),
-                epoch_id,
-            )
         if kind in _MONITORED and retrain_hook is not None:
             _pq_monitor(spark, batch_vecs, epoch_id)
 

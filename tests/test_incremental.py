@@ -663,18 +663,15 @@ def test_family_safe_split_keeps_families_together(spark):
 def test_append_refuses_mismatched_bucket_modulus(spark, tmp_path):
     """An append with a different n_buckets than the written banded state
     would route identical band_keys to different partitions and probes
-    would silently miss corpus members — it must refuse loudly, while a
-    matching explicit modulus and the infer-from-ptmod default both
-    succeed."""
+    would silently miss corpus members — so appends take no modulus:
+    they infer the saved one from the ptmod marker, and a state without
+    the marker is refused."""
     import pytest
 
     corpus, new = _corpus_and_batch(spark)
     path = str(tmp_path / "dedup_state_mod")
     dedup.save_dedup_state(corpus, path, n_buckets=32)
     state = dedup.batch_dedup_state(new)
-    with pytest.raises(ValueError, match="n_buckets"):
-        dedup.append_dedup_state(state, path, n_buckets=64)
-    dedup.append_dedup_state(state, path, n_buckets=32)   # explicit match
     dedup.append_dedup_state(state, path)                 # inferred
     banded = dedup.load_banded_state(spark, path)
     assert banded.select("ptmod").distinct().collect()[0]["ptmod"] == 32
@@ -992,11 +989,8 @@ def test_empty_bootstrap_keeps_configured_modulus(spark, tmp_path):
     """ADVICE r8: a brand-new (zero-row) corpus writes no banded
     partition files, so before the banded_ptmod marker the first append
     silently fell back to the default modulus. Now the configured
-    n_buckets survives the empty bootstrap: reads resolve it, appends
-    inherit it, and a mismatched explicit modulus refuses even against
-    an empty base."""
-    import pytest
-
+    n_buckets survives the empty bootstrap: reads resolve it and
+    appends inherit it."""
     from flink_clickstream_processor_msk_spark.streaming.ingest import (
         init_dedup_state,
     )
@@ -1008,8 +1002,6 @@ def test_empty_bootstrap_keeps_configured_modulus(spark, tmp_path):
 
     state = dedup.batch_dedup_state(new)
     try:
-        with pytest.raises(ValueError, match="n_buckets"):
-            dedup.append_dedup_state(state, path, n_buckets=64)
         dedup.append_dedup_state(state, path)  # inherits the configured 32
     finally:
         state.unpersist()
@@ -1985,6 +1977,132 @@ def test_corpus_ingest_dsir_gate_selects_before_dedup(spark, tmp_path):
     assert (1, 2) in got_pairs  # near-dups among admitted still detected
 
 
+def test_corpus_ingest_both_gates_select_then_quality_then_dedup(
+    spark, tmp_path
+):
+    """dsir_path AND lm_path/min_avg_prob on one corpus_ingest_sink: the
+    selection gate runs first, the quality gate scores only what it
+    admitted, then the dedup leg probes and folds. DSIR rejects reach
+    on_rejected with NULL avg_prob (never LM-scored), LM rejects carry
+    their score, and the state, pairs and flags hold only documents
+    both gates admit."""
+    from flink_clickstream_processor_msk_spark.operators import pipeline, text
+    from flink_clickstream_processor_msk_spark.streaming.ingest import (
+        corpus_ingest_sink,
+        init_dedup_state,
+    )
+
+    med = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    web = "spam junk click buy now free cheap deal win prize"
+    train = spark.createDataFrame(
+        [_doc(800, med), _doc(801, med + " lambda mu"),
+         _doc(802, web), _doc(803, web + " offer code")],
+        DOCS_SCHEMA,
+    )
+    dsir_path, lm_path = str(tmp_path / "dsir"), str(tmp_path / "lm")
+    pipeline.save_dsir(
+        train, train.filter(F.col("doc_id") <= 801), dsir_path,
+        n_buckets=128, keep_fraction=0.5,
+    )
+    # the LM knows only the first half of the target's word chain
+    text.save_lm(
+        spark.createDataFrame(
+            [_doc(700 + i, "alpha beta gamma delta epsilon zeta")
+             for i in range(6)],
+            DOCS_SCHEMA,
+        ),
+        lm_path,
+    )
+    batch = spark.createDataFrame(
+        [
+            _doc(1, med),                                # both admit
+            _doc(2, med + " nu"),                        # near-dup of 1
+            _doc(3, web + " extra junk words"),          # DSIR rejects
+            _doc(4, "one"),                              # DSIR: unscoreable
+            _doc(5, "eta theta iota kappa lambda mu"),   # LM rejects
+        ],
+        DOCS_SCHEMA,
+    )
+    scores = {
+        r["doc_id"]: r["avg_prob"]
+        for r in text.lm_bigram_score(
+            batch, lm=text.load_lm(spark, lm_path)
+        ).collect()
+    }
+    cut = (scores[5] + min(scores[1], scores[2])) / 2
+    assert scores[5] < cut
+    grams_path = str(tmp_path / "grams")
+    pipeline.save_test_grams(
+        spark.createDataFrame([_doc(900, med)], DOCS_SCHEMA), grams_path
+    )
+    state_path = str(tmp_path / "state")
+    init_dedup_state(spark, state_path)
+
+    events: list = []
+
+    def record(kind, key, value):
+        return lambda df, e: events.append(
+            (kind, {key(r): value(r) for r in df.collect()})
+        )
+
+    corpus_ingest_sink(
+        state_path, grams_path,
+        on_pairs=record("pairs", lambda r: (r["doc_a"], r["doc_b"]),
+                        lambda r: None),
+        on_flags=record("flags", lambda r: r["doc_id"],
+                        lambda r: r["contaminated"]),
+        dsir_path=dsir_path, lm_path=lm_path, min_avg_prob=cut,
+        on_rejected=record("rejected", lambda r: r["doc_id"],
+                           lambda r: r["avg_prob"]),
+    )(batch, 0)
+
+    assert [kind for kind, _ in events] == [
+        "rejected", "rejected", "pairs", "flags"
+    ]
+    (_, dsir_rejects), (_, lm_rejects), (_, pairs), (_, flags) = events
+    assert dsir_rejects == {3: None, 4: None}  # never LM-scored
+    assert lm_rejects == {5: pytest.approx(scores[5])}
+    assert set(pairs) == {(1, 2)}
+    assert set(flags) == {1, 2} and flags[1]
+    assert {
+        r["doc_id"] for r in dedup.load_dedup_state(spark, state_path).collect()
+    } == {1, 2}
+    spark.catalog.clearCache()
+
+
+def test_ingest_legs_have_one_copy_and_no_geometry_knobs():
+    """No Spark. Each ingest leg's model or state call is named in ONE
+    top-level function of streaming/ingest.py, so corpus_ingest_sink
+    cannot regrow a copy of a standalone leg; and no public function of
+    operators/dedup.py or streaming/ingest.py takes the minhash geometry
+    or a per-append file count — the banded state does not record its
+    band layout, so a per-call geometry would make probes miss."""
+    import ast
+    import inspect
+
+    from flink_clickstream_processor_msk_spark.streaming import ingest
+
+    top = ast.parse(inspect.getsource(ingest)).body
+    for leg in ("load_dsir", "load_lm", "batch_dedup_state",
+                "append_dedup_state", "compact_dedup_state"):
+        holders = [
+            f.name
+            for f in top
+            if isinstance(f, (ast.FunctionDef, ast.ClassDef))
+            and any(
+                leg in (getattr(n, "id", None), getattr(n, "attr", None),
+                        getattr(n, "name", None))
+                for n in ast.walk(f)
+            )
+        ]
+        assert len(holders) == 1, (leg, holders)
+    for mod in (dedup, ingest):
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if fn.__module__ == mod.__name__ and not name.startswith("_"):
+                params = set(inspect.signature(fn).parameters)
+                assert not params & {"n_perms", "n_bands", "delta_files"}, name
+
+
 def test_corpus_ingest_half_configured_gate_refused(spark, tmp_path):
     """Passing exactly one of lm_path/min_avg_prob is a silently-disabled
     quality gate the caller believes is on (ADVICE r10) — sink
@@ -2435,7 +2553,6 @@ def test_corpus_ingest_semantic_threshold_alone_refused(spark, tmp_path):
 
     for kwargs in (
         {"semantic_threshold": 0.9},
-        {"embedding_col": "emb2"},
     ):
         with pytest.raises(ValueError, match="embedding leg"):
             corpus_ingest_sink(
@@ -2859,10 +2976,8 @@ def test_save_dedup_state_clears_stale_journal(spark, tmp_path):
     assert os.path.isdir(f"{path}/minhash_state/deleted_ids")
     n_corpus_rows = (
         dedup._banded_frame(
-            dedup._signatures_from_sets(
-                dedup.shingle_hashes(corpus), "shingles", dedup.N_PERMS
-            ),
-            dedup.N_BANDS, dedup.N_PERMS, dedup.state_ptmod(spark, path),
+            dedup._signatures_from_sets(dedup.shingle_hashes(corpus)),
+            dedup.state_ptmod(spark, path),
         ).count()
     )
 
@@ -3102,9 +3217,7 @@ def test_banded_resave_crash_keeps_modulus_and_base_paired(spark, tmp_path):
             state.select("doc_id", "shingles", "signature"),
             path, "minhash_state", (),
         )
-        dedup._stage_banded_generation(
-            state, path, dedup.N_BANDS, dedup.N_PERMS, 64
-        )
+        dedup._stage_banded_generation(state, path, 64)
     finally:
         state.unpersist()
     assert dedup.state_ptmod(spark, path) == 32  # OLD marker, OLD base

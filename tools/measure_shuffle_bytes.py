@@ -5,12 +5,13 @@ from plan shapes.
 
 Usage: python tools/measure_shuffle_bytes.py <query> [<query> ...]
 
-For each named declared query: one bench.py ``run_query`` (CACHE_DEPS
-re-warm untimed, full plan through the noop sink, clearCache) whose
-construction and execution run under a dedicated job group, then sum
-shuffle-write bytes/records and input bytes over exactly the stages of
-that group's jobs. Prints one JSON
-line per query and a trailing summary dict.
+For each named declared query: one untimed bench.py ``run_query`` (so
+the plan's first compile stays out of ``wall_s``), then one more
+(CACHE_DEPS re-warm untimed, full plan through the noop sink,
+clearCache) whose construction and execution run under a dedicated job
+group, then sum shuffle-write bytes/records and input bytes over exactly
+the stages of that group's jobs. Prints one JSON line per query and a
+trailing summary dict.
 
 The UI/REST server is local (spark.ui.enabled defaults true); stage
 metrics are authoritative executor-reported totals, not estimates.
@@ -68,6 +69,7 @@ def main() -> None:
             sc.setJobGroup(f"msb:{name}", name)
             return fn(spark, sf_dir)
 
+        run_query(spark, sf_dir, name, fn)  # untimed: the first compile
         wall, _ = run_query(spark, sf_dir, name, grouped)
         sc.setJobGroup("", "")
         time.sleep(0.5)  # let the listener drain
